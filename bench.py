@@ -211,9 +211,9 @@ def _cover_df(spark, polys, level: int):
     return _COVER_CACHE[key]
 
 
-def flagship(spark, path: str, sink: str = "count") -> int:
-    """The north-star job. sink="noop" fully materializes every output
-    column (the honest timing mode); "count" returns the matched-row count."""
+def flagship_plan(spark, path: str):
+    """The north-star job's DataFrame: matched (image, polygon) rows with
+    every point column."""
     from pyspark.sql import functions as F
 
     from proj_spark.functions import image_geo_full_udf, tile_x, tile_y
@@ -223,8 +223,7 @@ def flagship(spark, path: str, sink: str = "count") -> int:
     imgs = spark.read.parquet(path).select("image_id", "caption", "phash")
     # ONE fused pandas UDF for the whole per-point kernel chain (datum
     # Helmert + UTM exact series + LCC + S2 encode — the gie-fixture CRS
-    # steps); tiles are JVM Column math; the join reuses the level-10 cell
-    # by JVM prefix math.
+    # steps); tiles are JVM Column math.
     pts = (
         imgs.withColumn("g", image_geo_full_udf(level=10)("phash"))
         .select(
@@ -237,10 +236,17 @@ def flagship(spark, path: str, sink: str = "count") -> int:
         .withColumn("tile_x", tile_x(F.col("lon"), 12))
         .withColumn("tile_y", tile_y(F.col("lat"), 12))
     )
-    # broadcast cell-cover index fused into the kernel stage: ONE python
-    # hop for the whole job; captions/ids never cross the Arrow boundary
+    # the level-8 cover is broadcast and joined in the JVM on the level-10
+    # cell's key; a second python evaluation tests only the candidate
+    # pairs, as (lon, lat, polygon index): captions/ids never cross Arrow
     polys = make_polygons(64)
-    joined = spatial_join_fused(pts, polys, level=8, cell_col="cell", cell_level=10)
+    return spatial_join_fused(pts, polys, level=8, cell_col="cell", cell_level=10)
+
+
+def flagship(spark, path: str, sink: str = "count") -> int:
+    """The north-star job. sink="noop" fully materializes every output
+    column (the honest timing mode); "count" returns the matched-row count."""
+    joined = flagship_plan(spark, path)
     if sink == "noop":
         joined.write.format("noop").mode("overwrite").save()
         return -1

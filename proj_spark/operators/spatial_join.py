@@ -1,38 +1,39 @@
-"""Point-in-polygon spatial join: S2 cell-cover prefilter + exact ray-cast.
+"""Point-in-polygon spatial join: S2 cell-cover prefilter + exact test.
 
-Plan shape (the north rule's prescribed strategy):
+Plan shape:
 
-  points ──pandas_udf──> s2_cell ──┐
-                                   ├─ equi-join on cell ──> candidate pairs
-  polygons ──driver cover──> cells ┘         (broadcast if the cover fits,
-                                              sort-merge join otherwise)
-  candidates ──mapInPandas ray-cast──> exact matches
+  points ── cell (level >= L) ── cell_join_key ──┐
+                                                 ├─ equi-join ──> candidate pairs
+  polygons ── driver cover ── (cell, poly) rows ─┘  (broadcast hash join if
+                                                     the cover fits, sort-merge
+                                                     join otherwise)
+  candidates ── pandas_udf("boolean") exact test ──> matches
 
 Why this scales: the expensive O(points x polygons) predicate becomes an
 int64 equality join Catalyst can broadcast or SMJ; AQE handles skewed
-megacells (plus optional explicit salting, see operators/skew.py). The
-exact test is vectorized numpy over Arrow batches grouped by polygon —
-no per-row Python.
+megacells (plus optional explicit salting, see operators/skew.py). Only
+the candidate pairs cross to Python, and only as (lon, lat, poly_idx):
+payload columns stay in the JVM, and one padded-edge numpy kernel tests
+every candidate against its own polygon with no per-polygon loop.
 
-The only spatial index in the reference is a bucket quadtree used for
-point-in-triangle lookup (/root/reference/src/quadtree.hpp:85-123); the
-cell cover plays that role here, as a *relational* structure instead of a
-pointer structure, because at 10^12 rows the index must be a join, not a
-tree walk.
+The cover plays the role of a spatial index as a *relational* structure
+instead of a pointer structure, because at 10^12 rows the index must be
+a join, not a tree walk.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Sequence
+from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from proj_spark import cells
-from proj_spark.functions import s2_cell_udf
+from proj_spark.functions import cell_join_key, cell_parent, s2_cell_udf
 from proj_spark.sources.synth import Polygon
 
 # S2 ST-space edge of one cell at level L is 1/2^L of a face; one face is
@@ -85,95 +86,26 @@ def polygon_cover(polys: Sequence[Polygon], level: int) -> pd.DataFrame:
     )
 
 
-def _ray_cast(lon: np.ndarray, lat: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Vectorized even-odd crossing test; ring is packed [x0,y0,x1,y1,...].
+def _exact_test(polys: Sequence[Polygon]) -> Callable[..., np.ndarray]:
+    """Vectorized exact point-in-polygon test for candidate pairs:
+    ``inside(lon, lat, poly_idx)`` -> bool ndarray, one entry per pair,
+    each point tested against ``polys[poly_idx]``.
 
-    Rings may use continuous longitudes beyond +-180 (antimeridian); points
-    are tested at lon and lon+360 and OR-ed.
+    Rings are packed [x0, y0, x1, y1, ...] and may use continuous
+    longitudes beyond +-180 (antimeridian); points are tested at lon and
+    lon + 360. Caps are (lon, lat, radius_deg) great-circle discs.
     """
-    xs = ring[0::2]
-    ys = ring[1::2]
-    x1 = xs
-    y1 = ys
-    x2 = np.roll(xs, -1)
-    y2 = np.roll(ys, -1)
-
-    def parity(px):
-        # (n_points, n_edges) broadcasting; polygons are small (<=16 edges)
-        py = lat[:, None]
-        pxb = px[:, None]
-        cond = (y1[None, :] > py) != (y2[None, :] > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = (x2 - x1)[None, :] * (py - y1[None, :]) / (y2 - y1)[None, :] + x1[None, :]
-        cross = cond & (pxb < xint)
-        return (cross.sum(axis=1) % 2).astype(bool)
-
-    return parity(lon) | parity(lon + 360.0)
-
-
-def _point_in_poly(lon: np.ndarray, lat: np.ndarray, p: Polygon) -> np.ndarray:
-    if p.kind == "cap":
-        clon, clat, radius = p.cap
-        d = np.degrees(
-            np.arccos(
-                np.clip(
-                    np.sin(np.radians(clat)) * np.sin(np.radians(lat))
-                    + np.cos(np.radians(clat)) * np.cos(np.radians(lat))
-                    * np.cos(np.radians(lon - clon)),
-                    -1.0, 1.0,
-                )
-            )
-        )
-        return d <= radius
-    return _ray_cast(lon, lat, p.ring)
-
-
-def spatial_join_fused(
-    points: DataFrame,
-    polys: Sequence[Polygon],
-    *,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    level: int = 8,
-    cell_col: str,
-    cell_level: int,
-) -> DataFrame:
-    """Broadcast-index variant: the cover (cell -> candidate poly indices)
-    ships INSIDE the pandas UDF as a plain dict, and the UDF returns the
-    matching poly indices per point as ``array<int>`` — exploded and mapped
-    to polygon ids by JVM codegen.
-
-    vs the relational ``spatial_join``: no join stage, no second python
-    hop, and pass-through payload columns (captions, image bytes) never
-    cross the Arrow boundary — one python stage total. This is the north
-    rule's "broadcast of the polygon R-tree/cell-cover index when it
-    fits"; fall back to ``spatial_join(strategy='smj')`` when it doesn't.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from proj_spark.functions import cell_parent
-
-    spark = points.sparkSession
-    cover_pdf = polygon_cover(polys, level).sort_values(["cell", "poly_idx"])
-    # CSR layout: sorted unique cells -> [start, end) ranges into poly ids
-    cov_cells, starts = np.unique(cover_pdf["cell"].to_numpy(np.int64),
-                                  return_index=True)
-    cov_polys = cover_pdf["poly_idx"].to_numpy(np.int64)
-    ends = np.append(starts[1:], len(cov_polys))
-    poly_list = list(polys)
-
     # padded edge matrices: (n_polys, max_edges). Degenerate padding edges
-    # (repeated last vertex => y1 == y2) contribute no ray crossings, so a
-    # single (candidates x max_edges) broadcast evaluates EVERY candidate
-    # against its own polygon with no per-polygon python loop.
-    max_e = max((len(p.ring) // 2 for p in poly_list if p.kind == "poly"), default=1)
-    P = len(poly_list)
+    # (repeated first vertex => y1 == y2) contribute no ray crossings, so a
+    # single (candidates x max_edges) broadcast evaluates every candidate
+    # against its own polygon.
+    max_e = max((len(p.ring) // 2 for p in polys if p.kind == "poly"), default=1)
+    P = len(polys)
     EX1 = np.zeros((P, max_e)); EY1 = np.zeros((P, max_e))
     EX2 = np.zeros((P, max_e)); EY2 = np.zeros((P, max_e))
     CAP = np.full((P, 3), np.nan)
     is_cap = np.zeros(P, dtype=bool)
-    for k, p in enumerate(poly_list):
+    for k, p in enumerate(polys):
         if p.kind == "cap":
             is_cap[k] = True
             CAP[k] = p.cap
@@ -182,12 +114,11 @@ def spatial_join_fused(
         ne = len(xs)
         EX1[k, :ne] = xs; EY1[k, :ne] = ys
         EX2[k, :ne] = np.roll(xs, -1); EY2[k, :ne] = np.roll(ys, -1)
-        if ne < max_e:  # pad with the closing vertex (degenerate edges)
+        if ne < max_e:
             EX1[k, ne:] = xs[0]; EY1[k, ne:] = ys[0]
             EX2[k, ne:] = xs[0]; EY2[k, ne:] = ys[0]
 
-    def _verify_vec(lon: np.ndarray, lat: np.ndarray, pl: np.ndarray) -> np.ndarray:
-        """Vectorized exact test for candidate (point, poly) pairs."""
+    def inside(lon: np.ndarray, lat: np.ndarray, pl: np.ndarray) -> np.ndarray:
         out = np.zeros(len(pl), dtype=bool)
         ring_sel = ~is_cap[pl]
         if ring_sel.any():
@@ -201,7 +132,8 @@ def spatial_join_fused(
             for px in (lon[ring_sel], lon[ring_sel] + 360.0):  # antimeridian
                 cross = cond & (px[:, None] < xint)
                 parity += cross.sum(axis=1)
-            # the two parities are mutually exclusive per the ring layout
+            # a ring spans less than 360 deg of longitude, so at most one of
+            # the two shifted points can be inside: the parities never add up
             out[ring_sel] = (parity % 2).astype(bool)
         cap_sel = is_cap[pl]
         if cap_sel.any():
@@ -213,50 +145,76 @@ def spatial_join_fused(
             out[cap_sel] = d <= cp[:, 2]
         return out
 
-    @pandas_udf("array<int>")
-    def _matches(lon_s: pd.Series, lat_s: pd.Series, cell_s: pd.Series) -> pd.Series:
-        lon = lon_s.to_numpy(dtype=np.float64)
-        lat = lat_s.to_numpy(dtype=np.float64)
-        cells_arr = cell_s.to_numpy(dtype=np.int64)
-        n = len(lon)
-        # vectorized cover lookup: searchsorted into the CSR cell index
-        pos = np.searchsorted(cov_cells, cells_arr)
-        pos_c = np.minimum(pos, len(cov_cells) - 1)
-        covered = cov_cells[pos_c] == cells_arr
-        # expand candidates: point i spans cnt[i] (point, poly) pairs
-        cnt = np.where(covered, ends[pos_c] - starts[pos_c], 0)
-        pt_idx = np.repeat(np.arange(n), cnt)
-        # candidate poly ids: starts[pos]+offset-within-range, ranges packed
-        csum = np.concatenate(([0], np.cumsum(cnt)))
-        offs = np.arange(csum[-1]) - np.repeat(csum[:-1], cnt)
-        pl_idx = cov_polys[np.repeat(starts[pos_c], cnt) + offs]
-        # exact test for ALL candidates in one vectorized evaluation
-        match = _verify_vec(lon[pt_idx], lat[pt_idx], pl_idx)
-        # assemble array<int> per point from the (small) match set
-        m_pt = pt_idx[match]
-        m_pl = pl_idx[match]
-        out: list = [None] * n
-        for i, k in zip(m_pt.tolist(), m_pl.tolist()):  # matches only (~few %)
-            cur = out[i]
-            if cur is None:
-                out[i] = [k]
-            else:
-                cur.append(k)
-        return pd.Series(out)
+    return inside
 
-    pts = points.withColumn(
-        "_cell_j",
-        F.col(cell_col) if cell_level == level
-        else cell_parent(F.col(cell_col), level),
+
+def _cover_join(
+    pts: DataFrame,
+    cell: Column,
+    cover: DataFrame,
+    polys: Sequence[Polygon],
+    *,
+    level: int,
+    lon_col: str,
+    lat_col: str,
+    broadcast: bool,
+    keep_cols: Sequence[str],
+) -> DataFrame:
+    """Equi-join ``pts`` on the key of its ``cell`` against the key of the
+    cover's cells, then keep the candidate pairs the exact test accepts:
+    ``keep_cols`` of ``pts`` plus ``polygon_id``.
+
+    The test is a BOOLEAN pandas UDF over (lon, lat, poly_idx) only:
+    strings (image_id, caption, ...) never cross the Arrow boundary and
+    the filter itself runs JVM-side.
+    """
+    on = cell_join_key(cell, level) == cell_join_key(cover["cell"], level)
+    if broadcast:
+        cand = pts.join(F.broadcast(cover), on)
+    else:
+        # co-locate both sides on the cell key; AQE splits skewed cells
+        cand = pts.hint("merge").join(cover.hint("merge"), on)
+
+    inside = _exact_test(list(polys))
+
+    @pandas_udf("boolean")
+    def _inside(lon: pd.Series, lat: pd.Series, pidx: pd.Series) -> pd.Series:
+        return pd.Series(inside(lon.to_numpy(dtype=np.float64),
+                                lat.to_numpy(dtype=np.float64),
+                                pidx.to_numpy(dtype=np.int64)))
+
+    return (
+        cand.filter(_inside(pts[lon_col], pts[lat_col], cover["poly_idx"]))
+        .select(*[pts[c] for c in keep_cols], cover["polygon_id"])
     )
-    matched = pts.withColumn(
-        "_pidx", F.explode(_matches(F.col(lon_col), F.col(lat_col), F.col("_cell_j")))
-    ).drop("_cell_j")
-    id_map = spark.createDataFrame(
-        [(i, p.polygon_id) for i, p in enumerate(poly_list)],
-        "_pidx int, polygon_id string",
-    )
-    return matched.join(F.broadcast(id_map), "_pidx").drop("_pidx")
+
+
+def spatial_join_fused(
+    points: DataFrame,
+    polys: Sequence[Polygon],
+    *,
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    level: int = 8,
+    cell_col: str,
+    cell_level: int,
+) -> DataFrame:
+    """Broadcast variant for points that already carry a cell id
+    (``cell_col`` at ``cell_level`` >= ``level``): returns the points'
+    columns plus ``polygon_id``, one row per (point, containing polygon).
+
+    The level-``level`` cover is broadcast and joined in the JVM on the
+    cell's join key, so the points' own cell needs no second encode and
+    no point crosses to Python for the lookup. The exact test then runs
+    in one Python evaluation over the candidate pairs only. Fall back to
+    ``spatial_join(strategy='smj')`` when the cover does not fit in memory.
+    """
+    if cell_level < level:
+        raise ValueError(f"cell_level {cell_level} is coarser than level {level}")
+    cover = points.sparkSession.createDataFrame(polygon_cover(polys, level))
+    return _cover_join(
+        points, points[cell_col], cover, polys, level=level, lon_col=lon_col,
+        lat_col=lat_col, broadcast=True, keep_cols=points.columns)
 
 
 def spatial_join(
@@ -275,7 +233,7 @@ def spatial_join(
     """points (with lon/lat cols) x polygons -> rows that fall inside.
 
     strategy: "broadcast" | "smj" | "auto" (broadcast when the cover is
-    small enough to ship to every executor; SMJ on (cell) otherwise).
+    small enough to ship to every executor; SMJ on the cell key otherwise).
 
     cell_col/cell_level: reuse an existing cell column computed at a finer
     (>=) level — the join key becomes a pure JVM prefix-truncation instead
@@ -284,6 +242,10 @@ def spatial_join(
     cover: a precomputed cover DataFrame (cell, polygon_id, poly_idx) from
     ``polygon_cover`` — pass it when joining repeatedly against the same
     polygon set so the driver-side sampling + upload happen once.
+
+    The output holds ``keep_cols`` (default: every point column; a ``cell``
+    column among them is the level-``level`` cell id), lon, lat and
+    ``polygon_id``.
     """
     spark = points.sparkSession
     if cover is None:
@@ -294,8 +256,6 @@ def spatial_join(
         n_cover = None
 
     if cell_col is not None and (cell_level or level) >= level:
-        from proj_spark.functions import cell_parent
-
         src = F.col(cell_col)
         pts = points.withColumn(
             "cell", src if (cell_level or level) == level else cell_parent(src, level)
@@ -307,34 +267,8 @@ def spatial_join(
 
     if strategy == "auto":
         strategy = "broadcast" if (n_cover is None or n_cover <= 2_000_000) else "smj"
-    if strategy == "broadcast":
-        cand = pts.join(F.broadcast(cover), "cell")
-    else:
-        # co-locate both sides on the cell key; AQE splits skewed cells
-        cand = pts.hint("merge").join(cover.hint("merge"), "cell")
-
-    # Exact verify as a BOOLEAN pandas UDF over (lon, lat, poly_idx) only —
-    # strings (image_id, caption, ...) never cross the Arrow boundary; the
-    # filter itself runs JVM-side. This is what makes the stage scale: the
-    # python path moves 3 numeric columns in and 1 bit out per candidate.
-    poly_list = list(polys)
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def _inside(lon_s: pd.Series, lat_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
-        lon = lon_s.to_numpy(dtype=np.float64)
-        lat = lat_s.to_numpy(dtype=np.float64)
-        pidx = pidx_s.to_numpy(dtype=np.int64)
-        mask = np.zeros(len(lon), dtype=bool)
-        for k in np.unique(pidx):
-            sel = pidx == k
-            mask[sel] = _point_in_poly(lon[sel], lat[sel], poly_list[k])
-        return pd.Series(mask)
-
     keep = list(keep_cols) if keep_cols else [c for c in points.columns]
-    sel_cols = list(dict.fromkeys(keep + [lon_col, lat_col, "polygon_id"]))
-    return (
-        cand.filter(_inside(F.col(lon_col), F.col(lat_col), F.col("poly_idx")))
-        .select(*sel_cols)
-    )
+    return _cover_join(
+        pts, pts["cell"], cover, polys, level=level, lon_col=lon_col,
+        lat_col=lat_col, broadcast=strategy == "broadcast",
+        keep_cols=list(dict.fromkeys(keep + [lon_col, lat_col])))

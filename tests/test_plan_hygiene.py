@@ -4,7 +4,7 @@ Correctness says WHAT a query computes; these tests pin HOW Spark runs
 it — the properties that decide whether the plan survives a 100x
 scale-up: JVM-only paths stay out of Python, scans prune columns,
 aggregations combine map-side, small sides broadcast, and the flagship
-fused kernel does exactly one Arrow crossing.
+kernel UDF runs once per point.
 """
 
 import re
@@ -68,17 +68,66 @@ def test_knn_uses_broadcast_not_shuffle_cross(spark, entry):
     assert "CartesianProduct" not in plan
 
 
-def test_flagship_single_arrow_crossing(spark):
-    """The fused flagship kernel pays exactly ONE Python/Arrow stage:
-    phash -> CRS chain -> cell -> cover matches all inside one UDF."""
-    from proj_spark.functions import image_geo_udf
+def _python_evals(plan: str) -> list[str]:
+    """The UDF calls of each Python evaluation node in a physical plan."""
+    return re.findall(r"(?:Arrow|Batch)EvalPython \[([^\]]*)\]", plan)
+
+
+@pytest.fixture(scope="module")
+def images_path(spark, tmp_path_factory):
+    from proj_spark.sources.synth import images_df
+
+    path = str(tmp_path_factory.mktemp("flagship") / "images.parquet")
+    images_df(spark, 2000, partitions=2).write.parquet(path)
+    return path
+
+
+def _assert_kernel_runs_once(plan: str) -> None:
+    evals = _python_evals(plan)
+    # the kernel UDF (phash -> coords + cell) and the exact test over the
+    # candidate pairs' (lon, lat, poly_idx); Catalyst must not copy the
+    # kernel into a pushed-down isnotnull(join key) filter
+    assert len(evals) == 2, evals
+    assert sum("phash" in e for e in evals) == 1, evals
+    exact = [e for e in evals if "phash" not in e][0]
+    assert re.fullmatch(r"_inside\(lon#\d+, lat#\d+, poly_idx#\d+L\)#\d+", exact), exact
+
+
+def test_flagship_plan_shape(spark, images_path):
+    """bench.py's flagship: the kernel UDF is evaluated once, the cover join
+    is a broadcast hash join on the collision-free cell key (a raw S2 id
+    ends in zero bits that pile the cover into a few hash slots), and no
+    RDD-backed side table costs an extra job."""
+    import bench
+
+    plan = _plan(bench.flagship_plan(spark, images_path))
+    _assert_kernel_runs_once(plan)
+    m = re.search(r"BroadcastHashJoin \[([^\]]*)\], \[([^\]]*)\]", plan)
+    assert m, plan
+    for key in m.groups():
+        assert re.fullmatch(
+            r"coalesce\(shiftrightunsigned\([^,()]*cell#\d+L?, 45\), -1\)", key), key
+    assert "Scan ExistingRDD" not in plan
+
+
+def test_smj_spatial_join_kernel_runs_once(spark, images_path):
+    """The relational sort-merge join on the same points keeps the kernel
+    UDF in one Python evaluation."""
     from pyspark.sql import functions as F
 
-    imgs = spark.read.parquet(f"{SF}/events.parquet").limit(100)
-    g = image_geo_udf()
-    df = imgs.withColumn("geo", g(F.xxhash64("event_id")))
-    plan = _plan(df)
-    assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 1
+    from proj_spark.functions import image_geo_full_udf
+    from proj_spark.operators.spatial_join import spatial_join
+    from proj_spark.sources.synth import make_polygons
+
+    g = spark.read.parquet(images_path) \
+        .withColumn("g", image_geo_full_udf(level=10)("phash"))
+    pts = g.select("image_id", "caption", F.col("g.lon").alias("lon"),
+                   F.col("g.lat").alias("lat"), F.col("g.cell").alias("cell"))
+    out = spatial_join(pts, make_polygons(16), strategy="smj", cell_col="cell",
+                       cell_level=10, level=8)
+    plan = _plan(out)
+    assert "SortMergeJoin" in plan
+    _assert_kernel_runs_once(plan)
 
 
 def test_lsh_pair_join_is_equi_join_on_band(spark):

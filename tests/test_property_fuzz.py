@@ -8,7 +8,7 @@ closure, symmetry under endpoint swap, and graceful NaN propagation.
 import math
 
 import numpy as np
-from hypothesis import assume, given, settings
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
 from proj_spark.kernels import karney as K
@@ -20,26 +20,45 @@ lats = st.floats(-89.99, 89.99, allow_nan=False)
 lons = st.floats(-179.99, 179.99, allow_nan=False)
 
 
+# Pairs within ~150 km of the meridional half-circumference are near
+# antipodal and can have two equally short geodesics, mirror images of each
+# other (same ambiguity in GeographicLib).
+NEAR_ANTIPODAL_M = 19_850_000.0
+
+
+def lands_on(lat1, lon1, azi1, s12, lat2, lon2) -> bool:
+    """geod_direct from (lat1, lon1) along azi1 for s12 reaches (lat2, lon2)
+    (mm-level; antipodal worst case microns-off)."""
+    d = K.geod_direct(WGS84, [lat1], [lon1], [azi1], [s12])
+    km = 111.0
+    dlon = abs((d["lon2"][0] - lon2 + 180.0) % 360.0 - 180.0)
+    return (abs(d["lat2"][0] - lat2) * km < 1e-6
+            and dlon * km * max(math.cos(math.radians(lat2)), 1e-3) < 1e-5)
+
+
 @settings(max_examples=200, deadline=None)
 @given(lats, lons, lats, lons)
 def test_geod_inverse_direct_closure(lat1, lon1, lat2, lon2):
     r = K.geod_inverse(WGS84, [lat1], [lon1], [lat2], [lon2])
     assert np.isfinite(r["s12"][0])
-    d = K.geod_direct(WGS84, [lat1], [lon1], r["azi1"], r["s12"])
-    # land back on the target (mm-level; antipodal worst case microns-off)
-    km = 111.0
-    assert abs(d["lat2"][0] - lat2) * km < 1e-6
-    dlon = abs((d["lon2"][0] - lon2 + 180.0) % 360.0 - 180.0)
-    assert dlon * km * max(math.cos(math.radians(lat2)), 1e-3) < 1e-5
+    assert lands_on(lat1, lon1, r["azi1"][0], r["s12"][0], lat2, lon2)
 
 
 @settings(max_examples=200, deadline=None)
 @given(lats, lons, lats, lons)
+@example(-0.5, 0.0, 0.5, 179.5)  # two shortest geodesics, azi1 124.03/55.97
 def test_geod_inverse_symmetry(lat1, lon1, lat2, lon2):
     a = K.geod_inverse(WGS84, [lat1], [lon1], [lat2], [lon2])
     b = K.geod_inverse(WGS84, [lat2], [lon2], [lat1], [lon1])
     assert abs(a["s12"][0] - b["s12"][0]) < 1e-6
-    # forward azimuth of the reverse path is the back azimuth + 180
+    if a["s12"][0] >= NEAR_ANTIPODAL_M:
+        # either direction may pick either mirror geodesic: both must
+        # still be shortest paths that reach their targets
+        assert lands_on(lat1, lon1, a["azi1"][0], a["s12"][0], lat2, lon2)
+        assert lands_on(lat2, lon2, b["azi1"][0], b["s12"][0], lat1, lon1)
+        return
+    # unique geodesic: forward azimuth of the reverse path is the back
+    # azimuth + 180 (undefined for coincident points)
     diff = (a["azi1"][0] - b["azi2"][0] + 180.0) % 360.0 - 180.0
     assert abs(abs(diff) - 180.0) < 1e-6 or a["s12"][0] < 1.0
 
@@ -78,7 +97,7 @@ def test_polygon_area_orientation_antisymmetry(ring):
                            [p[1] for p in ring], lons_,
                            [ring[(i + 1) % len(ring)][1] for i in range(len(ring))],
                            [ring[(i + 1) % len(ring)][0] for i in range(len(ring))])
-    assume(float(np.max(edges["s12"])) < 19_850_000.0)
+    assume(float(np.max(edges["s12"])) < NEAR_ANTIPODAL_M)
     a_fwd, per_fwd = K.geod_polygon_area(WGS84, lons_, lats_)
     a_rev, per_rev = K.geod_polygon_area(WGS84, lons_[::-1], lats_[::-1])
     area0 = 4 * math.pi * K.authalic_c2(WGS84)

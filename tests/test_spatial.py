@@ -27,13 +27,44 @@ def points_pdf():
     return pd.DataFrame({"pid": ids, "lon": lon, "lat": lat})
 
 
+def _inside_ring(lon, lat, ring):
+    """Even-odd rule over the ring's edges; a ring may run past +180, so a
+    point counts when it, or its copy 360 deg east, is inside."""
+    xs, ys = ring[0::2], ring[1::2]
+    hit = np.zeros(len(lon), dtype=bool)
+    for px in (lon, lon + 360.0):
+        odd = np.zeros(len(lon), dtype=bool)
+        for i in range(len(xs)):
+            x1, y1 = xs[i - 1], ys[i - 1]
+            x2, y2 = xs[i], ys[i]
+            if y1 == y2:
+                continue
+            straddles = (y1 > lat) != (y2 > lat)
+            x_at = x1 + (lat - y1) * (x2 - x1) / (y2 - y1)
+            odd ^= straddles & (px < x_at)
+        hit |= odd
+    return hit
+
+
+def _inside_cap(lon, lat, cap):
+    """Haversine great-circle distance to the cap centre <= its radius."""
+    clon, clat, radius = np.radians(cap)
+    lo, la = np.radians(lon), np.radians(lat)
+    h = (np.sin((la - clat) / 2) ** 2
+         + np.cos(la) * np.cos(clat) * np.sin((lo - clon) / 2) ** 2)
+    return 2 * np.arcsin(np.sqrt(np.clip(h, 0.0, 1.0))) <= radius
+
+
 def brute_force_matches(points_pdf, polys):
     lon = points_pdf["lon"].to_numpy()
     lat = points_pdf["lat"].to_numpy()
     pid = points_pdf["pid"].to_numpy()
     rows = set()
     for p in polys:
-        inside = sj._point_in_poly(lon, lat, p)
+        if p.kind == "cap":
+            inside = _inside_cap(lon, lat, p.cap)
+        else:
+            inside = _inside_ring(lon, lat, p.ring)
         for q in pid[inside]:
             rows.add((int(q), p.polygon_id))
     return rows
@@ -58,6 +89,29 @@ def test_spatial_join_smj_same_result(spark, polys, points_pdf):
     rb = {(int(r.pid), r.polygon_id) for r in b.collect()}
     rs = {(int(r.pid), r.polygon_id) for r in s.collect()}
     assert rb == rs
+
+
+@pytest.mark.parametrize("level", [8, 10])
+def test_cell_join_key_injective_on_cover(spark, polys, points_pdf, level):
+    """The join key is one-to-one over a real cover's cells, never the -1
+    a null cell maps to, and equal for a point's finer cell and its
+    level-``level`` ancestor (the fused join keys the finer cell)."""
+    from proj_spark import cells
+    from proj_spark.functions import cell_join_key
+
+    cov = sj.polygon_cover(polys, level)["cell"].drop_duplicates()
+    lon, lat = points_pdf["lon"].to_numpy(), points_pdf["lat"].to_numpy()
+    df = spark.createDataFrame(pd.DataFrame({
+        "cell": np.concatenate([cov.to_numpy(), cells.s2_cell_id(lon, lat, level)]),
+        "fine": np.concatenate([cov.to_numpy(), cells.s2_cell_id(lon, lat, 30)]),
+    }))
+    got = df.select(cell_join_key(F.col("cell"), level).alias("k"),
+                    cell_join_key(F.col("fine"), level).alias("kf")).toPandas()
+    k = got["k"].to_numpy()[:len(cov)]
+    assert len(cov) > 1000 and (cov.to_numpy() < 0).any()  # faces 4-5 wrap
+    assert len(np.unique(k)) == len(cov)
+    assert (k >= 0).all()
+    assert (got["k"] == got["kf"]).all()
 
 
 def test_knn_matches_bruteforce(spark, points_pdf):
@@ -170,3 +224,5 @@ def test_fused_join_matches_relational(spark):
     a = {(r.id, r.polygon_id) for r in rel.select("id", "polygon_id").collect()}
     b = {(r.id, r.polygon_id) for r in fus.select("id", "polygon_id").collect()}
     assert a == b and len(a) > 0
+    with pytest.raises(ValueError, match="coarser"):
+        spatial_join_fused(pts, polys, level=8, cell_col="cell", cell_level=6)

@@ -123,14 +123,15 @@ def main() -> None:
     md = f"""# BENCH/BASELINE — flagship throughput + scaling evidence
 
 Flagship job (the north-star pipeline, identical at both widths): read the
-image+caption parquet table ({n:,} rows) -> ONE fused Arrow-batched pandas
+image+caption parquet table ({n:,} rows) -> one fused Arrow-batched pandas
 UDF running the gie-fixture CRS chain per record (GDA-style 7-param
 Helmert datum pipeline cart->helmert->cart^-1, Poder/Engsager UTM with
 per-point zone, Lambert Conformal Conic 2SP, S2 level-10 cell encode,
 cache-blocked in 8k-row chunks) -> slippy-tile JVM Column math ->
-broadcast cell-cover index fused into the same python stage (matches
-emitted as array<int>, exploded JVM-side) -> matched rows with captions
-byte-intact, fully materialized (noop sink).
+JVM broadcast hash join against the level-8 cell cover on the cell key ->
+a second pandas UDF running the exact point-in-polygon test on the
+candidate pairs' (lon, lat, polygon index) only -> matched rows with
+captions byte-intact, fully materialized (noop sink).
 
 ## Measurement procedure (stable estimator)
 
