@@ -254,10 +254,6 @@ def flagship(spark, path: str, sink: str = "count") -> int:
 
 
 def main() -> None:
-    # wide local[] runs buffer pass-through columns across many concurrent
-    # ArrowEvalPython queues; the 8g default heap GC-thrashes at local[32]
-    os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
-
     from proj_spark.session import get_spark
 
     import __spark_entry__ as entrymod

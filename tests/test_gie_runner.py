@@ -88,6 +88,16 @@ def test_gie_skip_budget_flags_compile_regressions(tmp_path, capsys):
     assert "exceed budget" in out
 
 
+def test_gie_max_op_skips_usage_error(capsys):
+    """A missing or non-integer --max-op-skips value is a usage error
+    (exit 2), not a traceback."""
+    from proj_spark.cli import main
+
+    assert main(["gie", "--max-op-skips"]) == 2
+    assert main(["gie", "--max-op-skips", "many", "x.gie"]) == 2
+    assert capsys.readouterr().err.count("usage: gie") == 2
+
+
 def test_gie_z_lane_uses_declared_tolerance():
     """gie folds z into ONE 3D distance under the declared tolerance
     (gie.cpp proj_xyz_dist) — a 0.2 mm z error must fail a 0.1 mm

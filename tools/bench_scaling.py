@@ -46,7 +46,6 @@ def run_at(cpus: int, n_images: int, pin: bool = True) -> dict:
         # the repeats; each session already has a warmup (count-sink) pass
         BENCH_REPEAT="1",
     )
-    env.setdefault("SPARK_DRIVER_MEM", "48g")
     # one transport for every width: bench.py's phase probe may flip a
     # single session to UDS, which would compare widths across different
     # IPC paths and skew the ratio; the interleaved best-of-k already
