@@ -23,11 +23,30 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from proj_spark import cells
-from proj_spark.plans.pipeline import Pipeline, compile_pipeline
+from proj_spark.plans.pipeline import compile_pipeline
 
 # ---------------------------------------------------------------------------
 # pandas UDF factories (numpy kernels)
 # ---------------------------------------------------------------------------
+
+
+def _coord_udf(target, direction: str, out_cols: list[str]):
+    """pandas UDF over the coordinate columns (x, y[, z[, t]]) ->
+    struct<out_cols double>: ``target.fwd_deg`` (or ``inv_deg``) over
+    KERNEL_CHUNK slices of the Arrow batch. ``target`` is a compiled
+    Pipeline or any object with fwd_deg/inv_deg."""
+
+    @pandas_udf(", ".join(f"{c} double" for c in out_cols))
+    def _udf(*cols: pd.Series) -> pd.DataFrame:
+        arrays = [c.to_numpy(dtype=np.float64) for c in cols]
+        run_deg = target.fwd_deg if direction == "fwd" else target.inv_deg
+
+        def run(sl):
+            return dict(zip(out_cols, run_deg(*[a[sl] for a in arrays])))
+
+        return _chunked(run, len(arrays[0]), out_cols)
+
+    return _udf
 
 
 def transform_udf(spec: str, direction: str = "fwd"):
@@ -37,23 +56,7 @@ def transform_udf(spec: str, direction: str = "fwd"):
     run pure numpy over Arrow batches — the distributed analogue of
     proj_trans_generic's strided columnar loop (reference 4D_api.cpp:609-705).
     """
-    pipe = compile_pipeline(spec)
-
-    @pandas_udf("x double, y double")
-    def _udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        av = a.to_numpy(dtype=np.float64)
-        bv = b.to_numpy(dtype=np.float64)
-
-        def run(sl):
-            if direction == "fwd":
-                x, y, _, _ = pipe.fwd_deg(av[sl], bv[sl])
-            else:
-                x, y, _, _ = pipe.inv_deg(av[sl], bv[sl])
-            return {"x": x, "y": y}
-
-        return _chunked(run, len(av), ["x", "y"])
-
-    return _udf
+    return _coord_udf(compile_pipeline(spec), direction, ["x", "y"])
 
 
 def dispatch_udf(disp, direction: str = "fwd"):
@@ -61,70 +64,19 @@ def dispatch_udf(disp, direction: str = "fwd"):
     with fwd_deg/inv_deg): per-point candidate-operation dispatch with
     bbox ranking + invalid-result retry (reference 4D_api.cpp proj_trans
     alternative-operation semantics) executed vectorized per Arrow batch."""
-
-    @pandas_udf("x double, y double")
-    def _udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        av = a.to_numpy(dtype=np.float64)
-        bv = b.to_numpy(dtype=np.float64)
-
-        def run(sl):
-            if direction == "fwd":
-                x, y, _, _ = disp.fwd_deg(av[sl], bv[sl])
-            else:
-                x, y, _, _ = disp.inv_deg(av[sl], bv[sl])
-            return {"x": x, "y": y}
-
-        return _chunked(run, len(av), ["x", "y"])
-
-    return _udf
+    return _coord_udf(disp, direction, ["x", "y"])
 
 
 def transform3d_udf(spec: str, direction: str = "fwd"):
     """pandas UDF (x, y, z) -> struct<x,y,z double> for datum pipelines."""
-    pipe = compile_pipeline(spec)
-
-    @pandas_udf("x double, y double, z double")
-    def _udf(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.DataFrame:
-        av = a.to_numpy(dtype=np.float64)
-        bv = b.to_numpy(dtype=np.float64)
-        cv = c.to_numpy(dtype=np.float64)
-
-        def run(sl):
-            if direction == "fwd":
-                x, y, z, _ = pipe.fwd_deg(av[sl], bv[sl], cv[sl])
-            else:
-                x, y, z, _ = pipe.inv_deg(av[sl], bv[sl], cv[sl])
-            return {"x": x, "y": y, "z": z}
-
-        return _chunked(run, len(av), ["x", "y", "z"])
-
-    return _udf
+    return _coord_udf(compile_pipeline(spec), direction, ["x", "y", "z"])
 
 
 def transform4d_udf(spec: str, direction: str = "fwd"):
     """pandas UDF (x, y, z, t) -> struct<x,y,z double> for 4D pipelines
     (time-dependent Helmert: t is the coordinate epoch in decimal years,
     reference src/transformations/helmert.cpp parameter propagation)."""
-    pipe = compile_pipeline(spec)
-
-    @pandas_udf("x double, y double, z double")
-    def _udf(a: pd.Series, b: pd.Series, c: pd.Series,
-             d: pd.Series) -> pd.DataFrame:
-        av = a.to_numpy(dtype=np.float64)
-        bv = b.to_numpy(dtype=np.float64)
-        cv = c.to_numpy(dtype=np.float64)
-        dv = d.to_numpy(dtype=np.float64)
-
-        def run(sl):
-            if direction == "fwd":
-                x, y, z, _ = pipe.fwd_deg(av[sl], bv[sl], cv[sl], dv[sl])
-            else:
-                x, y, z, _ = pipe.inv_deg(av[sl], bv[sl], cv[sl], dv[sl])
-            return {"x": x, "y": y, "z": z}
-
-        return _chunked(run, len(av), ["x", "y", "z"])
-
-    return _udf
+    return _coord_udf(compile_pipeline(spec), direction, ["x", "y", "z"])
 
 
 def lonlat_udf():

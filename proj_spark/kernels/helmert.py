@@ -10,11 +10,11 @@ x' = scale * R * (x - refp) + T (:362-400), reverse via transpose (:402-437),
 Fixture anchors: GDA94->GDA2020 7-param at 75 um and kinematic
 ITRF2014@2018->GDA2020 at 40 um (test/gie/GDA.gie:27-75).
 
-Spark-side realization: the rotation matrix entries are scalars computed
-driver-side; the kernel is a broadcasted 3x3 matmul over numpy columns.
-Kinematic transforms rebuild the 9 entries per *distinct epoch* (vectorized
-via np.unique) — datasets overwhelmingly carry one epoch, matching PROJ's
-"only rebuild when t_obs changes" caching.
+Spark-side realization: a static transform's rotation matrix entries are
+scalars; the kernel is a broadcasted 3x3 matmul over numpy columns. A
+kinematic transform evaluates the propagated parameters and the 9 entries
+on the epoch column itself, one array operation each, so its cost does not
+depend on how many distinct epochs a batch carries.
 """
 
 from __future__ import annotations
@@ -83,37 +83,38 @@ def from_params(params: dict) -> HelmertConsts:
     )
 
 
-def _rot_matrix(rx: float, ry: float, rz: float, exact: bool, position_vector: bool) -> np.ndarray:
-    """Rotation matrix (coordinate_frame by default; PV = transpose)."""
+def _rotation(rx, ry, rz, exact: bool, position_vector: bool):
+    """Rotation matrix rows (coordinate_frame by default; PV = transpose).
+    The angles, and so the entries, are scalars or per-point arrays."""
     if exact:
-        cf, sf = math.cos(rx), math.sin(rx)
-        ct, st = math.cos(ry), math.sin(ry)
-        cp, sp = math.cos(rz), math.sin(rz)
-        R = np.array([
-            [ct * cp, cf * sp + sf * st * cp, sf * sp - cf * st * cp],
-            [-ct * sp, cf * cp - sf * st * sp, sf * cp + cf * st * sp],
-            [st, -sf * ct, cf * ct],
-        ])
+        cf, sf = np.cos(rx), np.sin(rx)
+        ct, st = np.cos(ry), np.sin(ry)
+        cp, sp = np.cos(rz), np.sin(rz)
+        R = ((ct * cp, cf * sp + sf * st * cp, sf * sp - cf * st * cp),
+             (-ct * sp, cf * cp - sf * st * sp, sf * cp + cf * st * sp),
+             (st, -sf * ct, cf * ct))
     else:  # small-angle linearization (the historically published form)
-        R = np.array([
-            [1.0, rz, -ry],
-            [-rz, 1.0, rx],
-            [ry, -rx, 1.0],
-        ])
+        R = ((1.0, rz, -ry),
+             (-rz, 1.0, rx),
+             (ry, -rx, 1.0))
     if position_vector:
-        R = R.T
+        R = tuple(zip(*R))
     return R
 
 
-def _params_at(C: HelmertConsts, t: float):
-    if C.t_epoch is None:
-        return (C.x, C.y, C.z), (C.rx, C.ry, C.rz), C.s
-    dt = t - C.t_epoch
-    return (
-        (C.x + C.dx * dt, C.y + C.dy * dt, C.z + C.dz * dt),
-        (C.rx + C.drx * dt, C.ry + C.dry * dt, C.rz + C.drz * dt),
-        C.s + C.ds * dt,
-    )
+def _params_at(C: HelmertConsts, t):
+    """Translation, rotation, scale factor and rotation matrix at epoch
+    ``t``: scalars for a static transform (no ``t`` or no ``t_epoch``),
+    per-point arrays for a kinematic one (non-finite epochs read as
+    ``t_epoch``)."""
+    T, r, s = (C.x, C.y, C.z), (C.rx, C.ry, C.rz), C.s
+    if t is not None and C.t_epoch is not None:
+        t = np.asarray(t, dtype=np.float64)
+        dt = np.where(np.isfinite(t), t, C.t_epoch) - C.t_epoch
+        T = (C.x + C.dx * dt, C.y + C.dy * dt, C.z + C.dz * dt)
+        r = (C.rx + C.drx * dt, C.ry + C.dry * dt, C.rz + C.drz * dt)
+        s = C.s + C.ds * dt
+    return T, 1.0 + s * 1e-6, _rotation(*r, C.exact, C.position_vector)
 
 
 def helmert_fwd(X, Y, Z, C: HelmertConsts, t=None):
@@ -125,32 +126,12 @@ def helmert_fwd(X, Y, Z, C: HelmertConsts, t=None):
         cr = math.cos(C.theta) * C.s
         sr = math.sin(C.theta) * C.s
         return cr * X + sr * Y + C.x, -sr * X + cr * Y + C.y, Z
-    outX = np.empty_like(X)
-    outY = np.empty_like(Y)
-    outZ = np.empty_like(Z)
-
-    if t is None or C.t_epoch is None:
-        epochs = [None]
-        groups = [slice(None)]
-    else:
-        t = np.asarray(t, dtype=np.float64)
-        t = np.where(np.isfinite(t), t, C.t_epoch)
-        uniq, inverse = np.unique(t, return_inverse=True)
-        epochs = list(uniq)
-        groups = [inverse == k for k in range(len(uniq))]
-
+    (tx, ty, tz), scale, R = _params_at(C, t)
     rx0, ry0, rz0 = C.refp
-    for epoch, sel in zip(epochs, groups):
-        (tx, ty, tz), (rx, ry, rz), s = _params_at(C, epoch if epoch is not None else (C.t_epoch or 0.0))
-        R = _rot_matrix(rx, ry, rz, C.exact, C.position_vector)
-        scale = 1.0 + s * 1e-6
-        dX = X[sel] - rx0
-        dY = Y[sel] - ry0
-        dZ = Z[sel] - rz0
-        outX[sel] = scale * (R[0, 0] * dX + R[0, 1] * dY + R[0, 2] * dZ) + tx
-        outY[sel] = scale * (R[1, 0] * dX + R[1, 1] * dY + R[1, 2] * dZ) + ty
-        outZ[sel] = scale * (R[2, 0] * dX + R[2, 1] * dY + R[2, 2] * dZ) + tz
-    return outX, outY, outZ
+    dX, dY, dZ = X - rx0, Y - ry0, Z - rz0
+    return (scale * (R[0][0] * dX + R[0][1] * dY + R[0][2] * dZ) + tx,
+            scale * (R[1][0] * dX + R[1][1] * dY + R[1][2] * dZ) + ty,
+            scale * (R[2][0] * dX + R[2][1] * dY + R[2][2] * dZ) + tz)
 
 
 def helmert_inv(X, Y, Z, C: HelmertConsts, t=None):
@@ -164,29 +145,9 @@ def helmert_inv(X, Y, Z, C: HelmertConsts, t=None):
         dX = X - C.x
         dY = Y - C.y
         return dX * cr - dY * sr, dX * sr + dY * cr, Z
-    outX = np.empty_like(X)
-    outY = np.empty_like(Y)
-    outZ = np.empty_like(Z)
-
-    if t is None or C.t_epoch is None:
-        epochs = [None]
-        groups = [slice(None)]
-    else:
-        t = np.asarray(t, dtype=np.float64)
-        t = np.where(np.isfinite(t), t, C.t_epoch)
-        uniq, inverse = np.unique(t, return_inverse=True)
-        epochs = list(uniq)
-        groups = [inverse == k for k in range(len(uniq))]
-
+    (tx, ty, tz), scale, R = _params_at(C, t)
     rx0, ry0, rz0 = C.refp
-    for epoch, sel in zip(epochs, groups):
-        (tx, ty, tz), (rx, ry, rz), s = _params_at(C, epoch if epoch is not None else (C.t_epoch or 0.0))
-        R = _rot_matrix(rx, ry, rz, C.exact, C.position_vector)
-        scale = 1.0 + s * 1e-6
-        dX = (X[sel] - tx) / scale
-        dY = (Y[sel] - ty) / scale
-        dZ = (Z[sel] - tz) / scale
-        outX[sel] = R[0, 0] * dX + R[1, 0] * dY + R[2, 0] * dZ + rx0
-        outY[sel] = R[0, 1] * dX + R[1, 1] * dY + R[2, 1] * dZ + ry0
-        outZ[sel] = R[0, 2] * dX + R[1, 2] * dY + R[2, 2] * dZ + rz0
-    return outX, outY, outZ
+    dX, dY, dZ = (X - tx) / scale, (Y - ty) / scale, (Z - tz) / scale
+    return (R[0][0] * dX + R[1][0] * dY + R[2][0] * dZ + rx0,
+            R[0][1] * dX + R[1][1] * dY + R[2][1] * dZ + ry0,
+            R[0][2] * dX + R[1][2] * dY + R[2][2] * dZ + rz0)

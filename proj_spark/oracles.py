@@ -332,9 +332,9 @@ def emit_helmert_fwd(cols: list, C, X: str, Y: str, Z: str,
     """Mirror kernels.helmert.helmert_fwd static 7-param (small-angle or
     exact, either convention): rotation entries + scale inlined as scalars
     computed by the SAME Python code the kernel runs."""
-    from proj_spark.kernels.helmert import _rot_matrix
+    from proj_spark.kernels.helmert import _rotation
 
-    R = _rot_matrix(C.rx, C.ry, C.rz, C.exact, C.position_vector)
+    R = _rotation(C.rx, C.ry, C.rz, C.exact, C.position_vector)
     scale = 1.0 + C.s * 1e-6
     p = pfx
     rx0, ry0, rz0 = C.refp
@@ -344,8 +344,8 @@ def emit_helmert_fwd(cols: list, C, X: str, Y: str, Z: str,
     for out, row, t in (("X", 0, C.x), ("Y", 1, C.y), ("Z", 2, C.z)):
         cols.append((
             f"{p}{out}",
-            f"{scale!r} * ({R[row, 0]!r} * {p}dX + {R[row, 1]!r} * {p}dY"
-            f" + {R[row, 2]!r} * {p}dZ) + {t!r}",
+            f"{scale!r} * ({R[row][0]!r} * {p}dX + {R[row][1]!r} * {p}dY"
+            f" + {R[row][2]!r} * {p}dZ) + {t!r}",
         ))
     return f"{p}X", f"{p}Y", f"{p}Z"
 
@@ -355,9 +355,9 @@ def emit_helmert_inv(cols: list, C, X: str, Y: str, Z: str,
     """Mirror kernels.helmert.helmert_inv static 7-param: unscale /
     detranslate then multiply by the TRANSPOSE of the rotation matrix
     (reference src/transformations/helmert.cpp reverse path)."""
-    from proj_spark.kernels.helmert import _rot_matrix
+    from proj_spark.kernels.helmert import _rotation
 
-    R = _rot_matrix(C.rx, C.ry, C.rz, C.exact, C.position_vector)
+    R = _rotation(C.rx, C.ry, C.rz, C.exact, C.position_vector)
     scale = 1.0 + C.s * 1e-6
     p = pfx
     rx0, ry0, rz0 = C.refp
@@ -367,8 +367,8 @@ def emit_helmert_inv(cols: list, C, X: str, Y: str, Z: str,
     for out, col, r0 in (("X", 0, rx0), ("Y", 1, ry0), ("Z", 2, rz0)):
         cols.append((
             f"{p}{out}",
-            f"{R[0, col]!r} * {p}dX + {R[1, col]!r} * {p}dY"
-            f" + {R[2, col]!r} * {p}dZ + {r0!r}",
+            f"{R[0][col]!r} * {p}dX + {R[1][col]!r} * {p}dY"
+            f" + {R[2][col]!r} * {p}dZ + {r0!r}",
         ))
     return f"{p}X", f"{p}Y", f"{p}Z"
 
@@ -393,7 +393,7 @@ def emit_helmert_kinematic_fwd(cols: list, C, X: str, Y: str, Z: str,
     cols.append((f"{p}dY", f"{Y} - {ry0!r}"))
     cols.append((f"{p}dZ", f"{Z} - {rz0!r}"))
     # small-angle matrix rows; position_vector = transpose of
-    # coordinate_frame (kernels.helmert._rot_matrix)
+    # coordinate_frame (kernels.helmert._rotation)
     sg = -1.0 if C.position_vector else 1.0
     rows = (
         (f"1.0", f"{sg} * {p}rz", f"-({sg}) * {p}ry"),

@@ -7,8 +7,15 @@ constructor lookup; src/pipeline.cpp:135-262 step loop with per-step ``inv``,
 
 Here the same spec compiles into a ``Pipeline`` — an ordered list of steps,
 each a thin wrapper over a vectorized numpy kernel with driver-side frozen
-constants. ``Pipeline.fwd/inv`` run ALL steps over whole numpy columns inside
-one function call, which is exactly what gets closure-captured into a single
+constants. Projections follow PROJ's split: ``_PROJECTIONS`` is the one
+declarative table (name -> setup, fwd, inv | None, plus the frame entries an
+op fixes), and ``_build_projection`` is the one generic constructor that
+resolves the ellipsoid and applies +lon_0, +x_0/+y_0 and +over for every row
+(reference pj_list.h + init.cpp; fwd.cpp fwd_prepare, inv.cpp inv_finalize).
+``_BUILDERS`` maps every op name, projection or not, to its builder.
+
+``Pipeline.fwd/inv`` run ALL steps over whole numpy columns inside one
+function call, which is exactly what gets closure-captured into a single
 Arrow-batched pandas UDF: the whole CRS pipeline is fused per batch, with no
 shuffle and no per-row Python between steps.
 
@@ -26,15 +33,32 @@ import math
 import os
 import re
 from dataclasses import dataclass
+from functools import partial
+from typing import Callable, NamedTuple
 
 import numpy as np
 
 from proj_spark.crs import ELLIPSOIDS, Ellipsoid, resolve_ellipsoid
+from proj_spark.kernels import adams as k_adams
+from proj_spark.kernels import azimuthal as k_azim
 from proj_spark.kernels import cart as k_cart
+from proj_spark.kernels import conic as k_conic
+from proj_spark.kernels import cyl as k_cyl
+from proj_spark.kernels import healpix as k_healpix
 from proj_spark.kernels import helmert as k_helmert
+from proj_spark.kernels import interrupted as k_interrupted
+from proj_spark.kernels import isea as k_isea
 from proj_spark.kernels import lcc as k_lcc
 from proj_spark.kernels import merc as k_merc
+from proj_spark.kernels import oblique as k_oblique
+from proj_spark.kernels import pseudocyl as k_pseudocyl
+from proj_spark.kernels import qsc as k_qsc
+from proj_spark.kernels import som as k_som
 from proj_spark.kernels import tmerc as k_tmerc
+from proj_spark.kernels import world as k_world
+from proj_spark.kernels import world2 as k_world2
+from proj_spark.kernels import world3 as k_world3
+from proj_spark.kernels import world4 as k_world4
 from proj_spark.kernels.common import adjlon
 
 DEG2RAD = math.pi / 180.0
@@ -289,12 +313,12 @@ class ProjectionStep(Step):
     left = "rad"
     right = "m"
 
-    def __init__(self, kfwd, kinv, ell: Ellipsoid, lam0=0.0, x0=0.0, y0=0.0,
+    def __init__(self, kfwd, kinv, a: float, lam0=0.0, x0=0.0, y0=0.0,
                  over: bool = False):
         self.kfwd = kfwd
         self.kinv = kinv
-        self.a = ell.a
-        self.ra = ell.ra
+        self.a = a
+        self.ra = 1.0 / a
         self.lam0 = lam0
         self.x0 = x0
         self.y0 = y0
@@ -1817,886 +1841,495 @@ class ObTranStep(Step):
         return adjlon(lam + self.lam0), phi, z, t
 
 
-def _interrupted_builder(name: str):
-    """goode / igh / igh_o / imoll / imoll_o (kernels/interrupted.py)."""
-
-    from proj_spark.kernels import interrupted as I
-
-    fns = {
-        "goode": (I.goode_fwd, I.goode_inv),
-        "igh": (I.igh_fwd, I.igh_inv),
-        "igh_o": (I.igh_o_fwd, I.igh_o_inv),
-        "imoll": (I.imoll_fwd, I.imoll_inv),
-        "imoll_o": (I.imoll_o_fwd, I.imoll_o_inv),
-    }[name]
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        return ProjectionStep(
-            fns[0], fns[1], Ellipsoid.sphere(ell.a), _angle(params, "lon_0"),
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-    return build
-
-
-def _build_healpix(params: dict) -> Step:
-    from proj_spark.kernels import healpix as H
-
-    ell = resolve_ellipsoid(params)
-    rhealpix = params.get("proj") == "rhealpix" or "north_square" in params \
-        or "south_square" in params
-    name = str(params.get("proj", "healpix"))
-    C = H.setup_healpix(
-        ell,
-        rot_xy=_angle(params, "rot_xy"),
-        north_square=int(params.get("north_square", 0)),
-        south_square=int(params.get("south_square", 0)))
-    if name == "rhealpix":
-        fwd = lambda lam, phi: H.rhealpix_fwd(lam, phi, C)
-        inv = lambda x, y: H.rhealpix_inv(x, y, C)
-    else:
-        fwd = lambda lam, phi: H.healpix_fwd(lam, phi, C)
-        inv = lambda x, y: H.healpix_inv(x, y, C)
-    # ellipsoid variant scales by the AUTHALIC radius (healpix.cpp:568-571)
-    return ProjectionStep(
-        fwd, inv, Ellipsoid.sphere(C.auth_a), _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-
-def _build_qsc(params: dict) -> Step:
-    from proj_spark.kernels import qsc as Q
-
-    ell = resolve_ellipsoid(params)
-    lam0 = _angle(params, "lon_0")
-    C = Q.setup_qsc(ell, lam0, _angle(params, "lat_0"))
-    return ProjectionStep(
-        lambda lam, phi: Q.qsc_fwd(lam, phi, C),
-        lambda x, y: Q.qsc_inv(x, y, C),
-        ell, lam0,
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-
-def _build_isea(params: dict) -> Step:
-    from proj_spark.kernels import isea as I
-
-    ell = resolve_ellipsoid(params)
-    C = I.setup_isea(
-        ell,
-        orient=str(params.get("orient", "isea")),
-        lat_0=float(params["lat_0"]) if "lat_0" in params else None,
-        lon_0=float(params["lon_0"]) if "lon_0" in params else None,
-        azi=float(params.get("azi", 0.0)),
-        mode=str(params.get("mode", "plane")),
-    )
-    # like the reference, isea consumes +lon_0 as an orientation override in
-    # setup (isea.cpp:1027-1029) AND the generic fwd_prepare subtraction
-    # applies — mirror by passing lam0 through as well
-    return ProjectionStep(
-        lambda lam, phi: I.isea_fwd(lam, phi, C),
-        lambda x, y: I.isea_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-
-def _som_builder(name: str):
-    """Space Oblique Mercator family (kernels/som.py). The ascending
-    longitude plays the role of lam0 (subtracted pre-kernel like any
-    central meridian, reference som.cpp P->lam0)."""
-
-    from proj_spark.kernels import som as S
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        if name == "som":
-            C = S.setup_som(
-                ell, alf=_angle(params, "inc_angle"),
-                p22=float(params.get("ps_rev", 0.0)),
-                lam0=_angle(params, "asc_lon"))
-        elif name == "lsat":
-            C = S.setup_lsat(ell, int(params["lsat"]), int(params["path"]))
-        else:
-            C = S.setup_misrsom(ell, int(params["path"]))
-        return ProjectionStep(
-            lambda lam, phi: S.som_fwd(lam, phi, C),
-            lambda x, y: S.som_inv(x, y, C),
-            ell, C.lam0,
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-    return build
-
-
-def _adams_builder(name: str):
-    """guyou / peirce_q / adams_* conformal-square family (kernels/adams.py)."""
-
-    from proj_spark.kernels import adams as A
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        C = A.setup_adams(name, params)
-        if name == "adams_ws2":
-            inv = lambda x, y: A.adams_ws2_inv(x, y, C)
-        elif name == "peirce_q" and C.shape == "square":
-            inv = lambda x, y: A.peirce_q_square_inv(x, y, C)
-        elif name == "peirce_q" and C.shape == "diamond":
-            inv = lambda x, y: A.peirce_q_diamond_inv(x, y, C)
-        else:
-            def inv(x, y):
-                raise NotImplementedError(f"{name}: no inverse (reference has none)")
-        return ProjectionStep(
-            lambda lam, phi: A.adams_fwd(lam, phi, C), inv,
-            Ellipsoid.sphere(ell.a), _angle(params, "lon_0"),
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-
-    return build
-
-
-def _world4_builder(name: str):
-    """Builders for the batch-4 catalogue (kernels/world4.py)."""
-
-    from proj_spark.kernels import world4 as W4
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        lam0 = _angle(params, "lon_0")
-        x0 = float(params.get("x_0", 0.0))
-        y0 = float(params.get("y_0", 0.0))
-        k0 = float(params.get("k_0", params.get("k", 1.0)))
-
-        def noinv(msg):
-            def inv(x, y):
-                raise NotImplementedError(msg)
-            return inv
-
-        if name in ("eck2", "hatano", "mbt_fps", "mbtfpq"):
-            fwd, inv = {
-                "eck2": (W4.eck2_fwd, W4.eck2_inv),
-                "hatano": (W4.hatano_fwd, W4.hatano_inv),
-                "mbt_fps": (W4.mbt_fps_fwd, W4.mbt_fps_inv),
-                "mbtfpq": (W4.mbtfpq_fwd, W4.mbtfpq_inv),
-            }[name]
-            return ProjectionStep(fwd, inv, ell.sphere(ell.a), lam0, x0, y0)
-        if name in ("putp6", "putp6p"):
-            C = W4.PUTP6 if name == "putp6" else W4.PUTP6P
-            return ProjectionStep(
-                lambda lam, phi: W4.putp6_fwd(lam, phi, C),
-                lambda x, y: W4.putp6_inv(x, y, C),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "tcea":
-            C = W4.TceaConsts(k0, _angle(params, "lat_0"))
-            return ProjectionStep(
-                lambda lam, phi: W4.tcea_fwd(lam, phi, C),
-                lambda x, y: W4.tcea_inv(x, y, C),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "ccon":
-            C = W4.setup_ccon(float(params.get("lat_1", 0.0)))
-            return ProjectionStep(
-                lambda lam, phi: W4.ccon_fwd(lam, phi, C),
-                lambda x, y: W4.ccon_inv(x, y, C),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "rpoly":
-            C = W4.setup_rpoly(float(params.get("lat_ts", 0.0)),
-                               float(params.get("lat_0", 0.0)))
-            return ProjectionStep(
-                lambda lam, phi: W4.rpoly_fwd(lam, phi, C),
-                noinv("rpoly: no inverse (reference has none)"),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "bertin1953":
-            # fixed lam0/phi0 (reference bertin1953.cpp:81-87)
-            return ProjectionStep(
-                W4.bertin1953_fwd,
-                noinv("bertin1953: no inverse (reference has none)"),
-                ell.sphere(ell.a), 0.0, x0, y0)
-        if name == "oea":
-            C = W4.setup_oea(float(params["n"]), float(params["m"]),
-                             float(params.get("theta", 0.0)),
-                             float(params.get("lat_0", 0.0)))
-            return ProjectionStep(
-                lambda lam, phi: W4.oea_fwd(lam, phi, C),
-                lambda x, y: W4.oea_inv(x, y, C),
-                ell.sphere(ell.a), lam0, x0, y0)
-        if name == "lcca":
-            C = W4.setup_lcca(ell, float(params.get("lat_0", 0.0)), k0)
-            return ProjectionStep(
-                lambda lam, phi: W4.lcca_fwd(lam, phi, C),
-                lambda x, y: W4.lcca_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "gstmerc":
-            C = W4.setup_gstmerc(ell, float(params.get("lat_0", 0.0)), k0)
-            return ProjectionStep(
-                lambda lam, phi: W4.gstmerc_fwd(lam, phi, C),
-                lambda x, y: W4.gstmerc_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "col_urban":
-            C = W4.setup_col_urban(ell, float(params.get("lat_0", 0.0)),
-                                   float(params.get("h_0", 0.0)))
-            return ProjectionStep(
-                lambda lam, phi: W4.col_urban_fwd(lam, phi, C),
-                lambda x, y: W4.col_urban_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "labrd":
-            C = W4.setup_labrd(ell, float(params.get("lat_0", 0.0)),
-                               float(params.get("azi", 0.0)), k0)
-            return ProjectionStep(
-                lambda lam, phi: W4.labrd_fwd(lam, phi, C),
-                lambda x, y: W4.labrd_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "chamb":
-            C = W4.setup_chamb(
-                float(params.get("lat_1", 0.0)), float(params.get("lon_1", 0.0)),
-                float(params.get("lat_2", 0.0)), float(params.get("lon_2", 0.0)),
-                float(params.get("lat_3", 0.0)), float(params.get("lon_3", 0.0)),
-                lam0)
-            return ProjectionStep(
-                lambda lam, phi: W4.chamb_fwd(lam, phi, C),
-                noinv("chamb: no inverse (reference has none)"),
-                Ellipsoid.sphere(ell.a), lam0, x0, y0)
-        if name == "bipc":
-            ns = "ns" in params and str(params.get("ns")) not in ("False", "0")
-            return ProjectionStep(
-                lambda lam, phi: W4.bipc_fwd(lam, phi, ns),
-                lambda x, y: W4.bipc_inv(x, y, ns),
-                Ellipsoid.sphere(ell.a), lam0, x0, y0)
-        if name == "imw_p":
-            C = W4.setup_imw_p(
-                ell, float(params["lat_1"]), float(params["lat_2"]),
-                float(params["lon_1"]) if "lon_1" in params else None)
-            return ProjectionStep(
-                lambda lam, phi: W4.imw_p_fwd(lam, phi, C),
-                lambda x, y: W4.imw_p_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name == "rouss":
-            C = W4.setup_rouss(ell, float(params.get("lat_0", 0.0)), k0)
-            return ProjectionStep(
-                lambda lam, phi: W4.rouss_fwd(lam, phi, C),
-                lambda x, y: W4.rouss_inv(x, y, C),
-                ell, lam0, x0, y0)
-        if name in ("mil_os", "lee_os", "gs48", "alsk", "gs50"):
-            C = W4.setup_mod_ster(name, ell.es)
-            a = C.a if C.a is not None else ell.a
-            return ProjectionStep(
-                lambda lam, phi: W4.mod_ster_fwd(lam, phi, C),
-                lambda x, y: W4.mod_ster_inv(x, y, C),
-                Ellipsoid.sphere(a), C.lam0,
-                float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)))
-        if name == "nzmg":
-            # fixed Earth: intl ellipsoid, lam0=173E, phi0=41S, NZ offsets
-            # (reference nzmg.cpp:112-118); user x_0/y_0/lon_0 ignored.
-            intl = ELLIPSOIDS["intl"]
-            return ProjectionStep(
-                W4.nzmg_fwd, W4.nzmg_inv, intl,
-                math.radians(173.0), 2510000.0, 6023150.0)
-        raise ValueError(name)
-
-    return build
-
-
 # --------------------------------------------------------------------------
-# op registry
+# projection table
 # --------------------------------------------------------------------------
 
 def _angle(params: dict, key: str, default: float = 0.0) -> float:
     return math.radians(float(params[key])) if key in params else default
 
 
-def _build_tmerc(params: dict, exact_default: bool = True) -> Step:
+def _num(params: dict, key: str, default: float | None = 0.0):
+    return float(params[key]) if key in params else default
+
+
+def _k0(params: dict) -> float:
+    return float(params.get("k_0", params.get("k", 1.0)))
+
+
+class _Kernels(NamedTuple):
+    """What a setup returns when it also picks the kernels (reference: the
+    op's setup assigns P->fwd/P->inv, e.g. tmerc's algorithm, peirce_q's
+    shape)."""
+
+    fwd: Callable
+    inv: Callable | None
+    C: object
+
+
+class _Proj(NamedTuple):
+    """One projection-table row: only what is specific to the op.
+
+    ``setup(params, ell)`` freezes the kernel constants ``C`` (or returns
+    ``_Kernels``); None means the kernels take none. ``fwd(lam, phi, C)``
+    and ``inv(x, y, C)`` are the dimensionless kernels; ``inv`` is None
+    where the reference has no inverse. ``frame(params, ell, C)`` returns
+    the entries of the generic frame (``a``, ``lam0``, ``x0``, ``y0``) that
+    the op fixes or derives in its setup; ``defaults`` are parameters the
+    op supplies when the user does not."""
+
+    setup: Callable | None
+    fwd: Callable
+    inv: Callable | None = None
+    frame: Callable | None = None
+    defaults: dict | None = None
+
+
+def _build_projection(name: str, params: dict) -> Step:
+    """The generic part of every projection, done once (reference
+    init.cpp pj_init, fwd.cpp fwd_prepare/fwd_finalize, inv.cpp
+    inv_prepare/inv_finalize): ellipsoid, the row's setup, +lon_0,
+    +x_0/+y_0, +over, and one error for a missing inverse."""
+    row = _PROJECTIONS[name]
+    if row.defaults:
+        params = {**row.defaults, **params}
     ell = resolve_ellipsoid(params)
-    k0 = float(params.get("k_0", params.get("k", 1.0)))
-    lam0 = _angle(params, "lon_0")
-    phi0 = _angle(params, "lat_0")
-    x0 = float(params.get("x_0", 0.0))
-    y0 = float(params.get("y_0", 0.0))
-    use_approx = ("approx" in params) or params.get("algo") == "evenden_snyder" or ell.is_sphere
-    if use_approx:
+    C = row.setup(params, ell) if row.setup else None
+    fwd, inv = row.fwd, row.inv
+    if isinstance(C, _Kernels):
+        fwd, inv, C = C
+    frame = {"a": ell.a, "lam0": _angle(params, "lon_0"),
+             "x0": float(params.get("x_0", 0.0)),
+             "y0": float(params.get("y_0", 0.0))}
+    if row.frame:
+        frame.update(row.frame(params, ell, C))
+    if inv is None:
+        def kinv(x, y):
+            raise NotImplementedError(
+                f"{name}: no inverse (reference has none)")
+    else:
+        def kinv(x, y):
+            return inv(x, y, C)
+    return ProjectionStep(lambda lam, phi: fwd(lam, phi, C), kinv, **frame,
+                          over=bool(params.get("over")))
+
+
+def _const(C):
+    return lambda params, ell: C
+
+
+def _plain(mod, names: str) -> dict:
+    """Rows for ops whose kernels take no constants: ``<name>_fwd`` and,
+    where the reference has one, ``<name>_inv`` in ``mod``."""
+    return {n: _Proj(None, getattr(mod, f"{n}_fwd"),
+                     getattr(mod, f"{n}_inv", None)) for n in names.split()}
+
+
+def _setup_lam0(params, ell, C):
+    # the setup derives the central meridian (+lon_0 is its input, or ignored)
+    return {"lam0": C.lam0}
+
+
+def _tmerc_setup(params, ell):
+    k0, phi0 = _k0(params), _angle(params, "lat_0")
+    if ("approx" in params or params.get("algo") == "evenden_snyder"
+            or ell.is_sphere):
         C = k_tmerc.setup_approx(ell, k0=k0, phi0=phi0)
         if ell.is_sphere:
-            return ProjectionStep(
-                lambda lam, phi: k_tmerc.sph_fwd(lam, phi, C),
-                lambda x, y: k_tmerc.sph_inv(x, y, C),
-                ell, lam0, x0, y0,
-            )
-        return ProjectionStep(
-            lambda lam, phi: k_tmerc.approx_fwd(lam, phi, C),
-            lambda x, y: k_tmerc.approx_inv(x, y, C),
-            ell, lam0, x0, y0,
-        )
-    C = k_tmerc.setup_exact(ell, k0=k0, phi0=phi0)
-    return ProjectionStep(
-        lambda lam, phi: k_tmerc.exact_fwd(lam, phi, C),
-        lambda x, y: k_tmerc.exact_inv(x, y, C),
-        ell, lam0, x0, y0,
-    )
+            return _Kernels(k_tmerc.sph_fwd, k_tmerc.sph_inv, C)
+        return _Kernels(k_tmerc.approx_fwd, k_tmerc.approx_inv, C)
+    return k_tmerc.setup_exact(ell, k0=k0, phi0=phi0)
+
+
+def _utm_zone(params) -> int | None:
+    """+zone, or the zone holding +lon_0; None: per-point zones."""
+    if "zone" in params and params["zone"] is not True:
+        return int(params["zone"])
+    if "lon_0" in params:
+        lon0 = math.radians(float(params["lon_0"]))
+        return int(np.clip(math.floor(
+            (float(adjlon(np.array([lon0]))[0]) + math.pi) * 30.0 / math.pi),
+            0, 59)) + 1
+    return None
+
+
+def _utm_setup(params, ell):
+    if "approx" in params:
+        return _Kernels(k_tmerc.approx_fwd, k_tmerc.approx_inv,
+                        k_tmerc.setup_approx(ell, k0=0.9996, phi0=0.0))
+    return k_tmerc.setup_exact(ell, k0=0.9996, phi0=0.0)
+
+
+def _utm_frame(params, ell, C):
+    p = k_tmerc.utm_params(_utm_zone(params), south="south" in params)
+    return {"lam0": p["lam0"], "x0": p["x0"], "y0": p["y0"]}
 
 
 def _build_utm(params: dict) -> Step:
     ell = resolve_ellipsoid(params)
     if ell.is_sphere:
         raise ValueError("utm requires an ellipsoid")
-    if "zone" in params and params["zone"] is not True:
-        zone = int(params["zone"])
-        p = k_tmerc.utm_params(zone, south="south" in params)
-    elif "lon_0" in params:
-        lon0 = math.radians(float(params["lon_0"]))
-        zone = int(np.clip(math.floor((float(adjlon(np.array([lon0]))[0]) + math.pi) * 30.0 / math.pi), 0, 59)) + 1
-        p = k_tmerc.utm_params(zone, south="south" in params)
-    else:
+    if _utm_zone(params) is None:
         return UTMAutoStep(ell)
-    if "approx" in params:
-        C = k_tmerc.setup_approx(ell, k0=p["k0"], phi0=p["phi0"])
-        return ProjectionStep(
-            lambda lam, phi: k_tmerc.approx_fwd(lam, phi, C),
-            lambda x, y: k_tmerc.approx_inv(x, y, C),
-            ell, p["lam0"], p["x0"], p["y0"],
-        )
-    C = k_tmerc.setup_exact(ell, k0=p["k0"], phi0=p["phi0"])
-    return ProjectionStep(
-        lambda lam, phi: k_tmerc.exact_fwd(lam, phi, C),
-        lambda x, y: k_tmerc.exact_inv(x, y, C),
-        ell, p["lam0"], p["x0"], p["y0"],
-    )
+    return _build_projection("utm", params)
 
 
-def _build_lcc(params: dict) -> Step:
-    ell = resolve_ellipsoid(params)
-    C = k_lcc.setup_lcc(
-        ell,
-        lat_1=float(params.get("lat_1", 0.0)),
-        lat_2=float(params["lat_2"]) if "lat_2" in params else None,
-        lat_0=float(params["lat_0"]) if "lat_0" in params else None,
-        k0=float(params.get("k_0", params.get("k", 1.0))),
-    )
-    return ProjectionStep(
-        lambda lam, phi: k_lcc.lcc_fwd(lam, phi, C),
-        lambda x, y: k_lcc.lcc_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
-
-
-def _build_merc(params: dict) -> Step:
-    ell = resolve_ellipsoid(params)
-    C = k_merc.setup_merc(
-        ell,
-        lat_ts=float(params["lat_ts"]) if "lat_ts" in params else None,
-        k0=float(params.get("k_0", params.get("k", 1.0))),
-    )
-    return ProjectionStep(
-        lambda lam, phi: k_merc.merc_fwd(lam, phi, C),
-        lambda x, y: k_merc.merc_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
-
-
-def _build_webmerc(params: dict) -> Step:
-    params = dict(params)
-    params.setdefault("ellps", "WGS84")
-    if params.get("datum") == "WGS84":
-        params["ellps"] = "WGS84"
-    ell = resolve_ellipsoid(params)
-    C = k_merc.setup_webmerc(ell)
-    return ProjectionStep(
-        lambda lam, phi: k_merc.merc_fwd(lam, phi, C),
-        lambda x, y: k_merc.merc_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
-
-
-def _proj_step(kmod_fwd, kmod_inv, C, params: dict, ell: Ellipsoid) -> Step:
-    return ProjectionStep(
-        lambda lam, phi: kmod_fwd(lam, phi, C),
-        lambda x, y: kmod_inv(x, y, C),
-        ell, _angle(params, "lon_0"),
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-        over=bool(params.get("over")),
-    )
-
-
-def _build_aea(params: dict) -> Step:
-    from proj_spark.kernels import conic as k
-
-    ell = resolve_ellipsoid(params)
+def _aea_setup(params, ell):
     if params.get("proj") == "leac":
-        lat_2 = float(params.get("lat_1", 0.0))
+        lat_2 = _num(params, "lat_1")
         lat_1 = -90.0 if "south" in params else 90.0
     else:
-        lat_1 = float(params.get("lat_1", 0.0))
-        lat_2 = float(params.get("lat_2", lat_1))
-    C = k.setup_aea(ell, lat_1, lat_2, float(params.get("lat_0", 0.0)))
-    return _proj_step(k.aea_fwd, k.aea_inv, C, params, ell)
+        lat_1 = _num(params, "lat_1")
+        lat_2 = _num(params, "lat_2", lat_1)
+    return k_conic.setup_aea(ell, lat_1, lat_2, _num(params, "lat_0"))
 
 
-def _build_eqdc(params: dict) -> Step:
-    from proj_spark.kernels import conic as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_eqdc(ell, float(params.get("lat_1", 0.0)),
-                     float(params.get("lat_2", 0.0)),
-                     float(params.get("lat_0", 0.0)))
-    return _proj_step(k.eqdc_fwd, k.eqdc_inv, C, params, ell)
-
-
-def _build_bonne(params: dict) -> Step:
-    from proj_spark.kernels import conic as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_bonne(ell, float(params["lat_1"]))
-    return _proj_step(k.bonne_fwd, k.bonne_inv, C, params, ell)
-
-
-def _build_stere(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_stere(
-        ell, float(params.get("lat_0", 0.0)),
-        float(params["lat_ts"]) if "lat_ts" in params else None,
-        float(params.get("k_0", params.get("k", 1.0))),
-    )
-    return _proj_step(k.stere_fwd, k.stere_inv, C, params, ell)
-
-
-def _build_ups(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    params = dict(params)
-    params.setdefault("x_0", 2000000.0)
-    params.setdefault("y_0", 2000000.0)
-    ell = resolve_ellipsoid(params)
+def _ups_setup(params, ell):
     if ell.is_sphere:
         raise ValueError("ups requires an ellipsoid")
-    C = k.setup_stere(ell, -90.0 if "south" in params else 90.0, None,
-                      float(params.get("k_0", 0.994)))
-    return _proj_step(k.stere_fwd, k.stere_inv, C, params, ell)
+    return k_azim.setup_stere(ell, -90.0 if "south" in params else 90.0, None,
+                              float(params.get("k_0", 0.994)))
 
 
-def _build_sterea(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
+def _urmfps_setup(n):
+    if not (0.0 < n <= 1.0):
+        raise ValueError("urmfps: n must be in ]0,1]")
+    return k_world.NConsts(n, C_y=1.139753528477 / n)
 
-    ell = resolve_ellipsoid(params)
-    C = k.setup_sterea(ell, float(params.get("lat_0", 0.0)),
-                       float(params.get("k_0", params.get("k", 1.0))))
-    return _proj_step(k.sterea_fwd, k.sterea_inv, C, params, ell)
 
-
-def _build_laea(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_laea(ell, float(params.get("lat_0", 0.0)))
-    return _proj_step(k.laea_fwd, k.laea_inv, C, params, ell)
-
-
-def _build_gnom(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_gnom(ell, float(params.get("lat_0", 0.0)))
-    return _proj_step(k.gnom_fwd, k.gnom_inv, C, params, ell)
-
-
-def _build_ortho(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_ortho(ell, float(params.get("lat_0", 0.0)),
-                      float(params.get("k_0", params.get("k", 1.0))),
-                      float(params.get("alpha", 0.0)))
-    return _proj_step(k.ortho_fwd, k.ortho_inv, C, params, ell)
-
-
-def _build_aeqd(params: dict) -> Step:
-    from proj_spark.kernels import azimuthal as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_aeqd(ell, float(params.get("lat_0", 0.0)),
-                     guam="guam" in params)
-    return _proj_step(k.aeqd_fwd, k.aeqd_inv, C, params, ell)
-
-
-def _build_cea(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_cea(ell, float(params["lat_ts"]) if "lat_ts" in params else None,
-                    float(params.get("k_0", params.get("k", 1.0))))
-    return _proj_step(k.cea_fwd, k.cea_inv, C, params, ell)
-
-
-def _build_cass(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_cass(ell, float(params.get("lat_0", 0.0)),
-                     hyperbolic="hyperbolic" in params)
-    return _proj_step(k.cass_fwd, k.cass_inv, C, params, ell)
-
-
-def _build_eqc(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_eqc(float(params.get("lat_ts", 0.0)), float(params.get("lat_0", 0.0)))
-    return _proj_step(k.eqc_fwd, k.eqc_inv, C, params, ell)
-
-
-def _build_mill(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    return _proj_step(k.mill_fwd, k.mill_inv, None, params, ell)
-
-
-def _build_somerc(params: dict) -> Step:
-    from proj_spark.kernels import cyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_somerc(ell, float(params.get("lat_0", 0.0)),
-                       float(params.get("k_0", params.get("k", 1.0))))
-    return _proj_step(k.somerc_fwd, k.somerc_inv, C, params, ell)
-
-
-def _build_sinu_family(params: dict) -> Step:
-    from proj_spark.kernels import pseudocyl as k
-
-    ell = resolve_ellipsoid(params)
-    proj = params.get("proj")
-    C = k.setup_gn_sinu(
-        ell,
-        float(params["m"]) if "m" in params else None,
-        float(params["n"]) if "n" in params else None,
-        proj=proj,
-    )
-    return _proj_step(k.sinu_fwd, k.sinu_inv, C, params, ell)
-
-
-def _build_moll_family(params: dict) -> Step:
-    from proj_spark.kernels import pseudocyl as k
-
-    ell = resolve_ellipsoid(params)
-    C = k.setup_moll(params.get("proj"))
-    return _proj_step(k.moll_fwd, k.moll_inv, C, params, ell)
-
-
-def _build_eck4(params: dict) -> Step:
-    from proj_spark.kernels import pseudocyl as k
-
-    ell = resolve_ellipsoid(params)
-    return _proj_step(k.eck4_fwd, k.eck4_inv, None, params, ell)
-
-
-def _build_robin(params: dict) -> Step:
-    from proj_spark.kernels import pseudocyl as k
-
-    ell = resolve_ellipsoid(params)
-    return _proj_step(k.robin_fwd, k.robin_inv, None, params, ell)
-
-
-def _world_builder(name: str):
-    """Builder factory for the spherical catalogue (kernels/world.py).
-    Every op forces es=0 like the reference (radius = a of the given
-    ellipsoid), and wires fwd/inv (inv raising where the reference has
-    no inverse)."""
-    import math as _m
-
-    from proj_spark.kernels import world as W
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        C = None
-        if name in W._ECK3_FAMILY:
-            fwd, inv, C = W.eck3_fwd, W.eck3_inv, W._ECK3_FAMILY[name]
-        elif name in W._STS_FAMILY:
-            fwd, inv, C = W.sts_fwd, W.sts_inv, W._STS_FAMILY[name]
-        elif name in ("putp5", "putp5p"):
-            fwd, inv = W.putp5_fwd, W.putp5_inv
-            C = W.Putp5Consts(2.0, 1.0) if name == "putp5" else W.Putp5Consts(1.5, 0.5)
-        elif name in ("putp3", "putp3p"):
-            fwd, inv = W.putp3_fwd, W.putp3_inv
-            C = W.Putp3Consts((4.0 if name == "putp3" else 2.0) * 0.1013211836)
-        elif name in ("putp4p", "weren"):
-            fwd, inv = W.putp4p_fwd, W.putp4p_inv
-            C = (W.Putp4pConsts(0.874038744, 3.883251825) if name == "putp4p"
-                 else W.Putp4pConsts(1.0, 4.442882938))
-        elif name in ("urmfps", "wag1"):
-            n = (float(params["n"]) if name == "urmfps"
-                 else 0.8660254037844386467637231707)
-            if not (0.0 < n <= 1.0):
-                raise ValueError("urmfps: n must be in ]0,1]")
-            fwd, inv, C = W.urmfps_fwd, W.urmfps_inv, W.NConsts(n, C_y=1.139753528477 / n)
-        elif name == "urm5":
-            n = float(params["n"])
-            q3 = float(params.get("q", 0.0)) / 3.0
-            alpha = _m.radians(float(params.get("alpha", 0.0)))
-            t = n * _m.sin(alpha)
-            m = _m.cos(alpha) / _m.sqrt(1.0 - t * t)
-            fwd, inv, C = W.urm5_fwd, W._no_inverse("urm5"), W.NConsts(
-                n, m=m, rmn=1.0 / (m * n), q3=q3)
-        elif name == "fouc_s":
-            n = float(params.get("n", 0.0))
-            if not (0.0 <= n <= 1.0):
-                raise ValueError("fouc_s: n must be in [0,1]")
-            fwd, inv, C = W.fouc_s_fwd, W.fouc_s_inv, W.NConsts(n)
-        elif name in ("loxim", "wink1", "wag3"):
-            key = "lat_1" if name in ("loxim", "wink1") else "lat_ts"
-            phi1 = _m.radians(float(params.get(key, 40.0 if name == "loxim" else 0.0)))
-            if name == "wag3":
-                c = _m.cos(phi1) / _m.cos(2.0 * phi1 / 3.0)
-            else:
-                c = _m.cos(phi1)
-                if name == "loxim" and c < 1e-8:
-                    raise ValueError("loxim: |lat_1| must be < 90")
-            fwd = {"loxim": W.loxim_fwd, "wink1": W.wink1_fwd, "wag3": W.wag3_fwd}[name]
-            inv = {"loxim": W.loxim_inv, "wink1": W.wink1_inv, "wag3": W.wag3_inv}[name]
-            C = W.Phi1Consts(phi1, c, _m.tan(FORTPI_ := _m.pi / 4 + 0.5 * phi1))
-        elif name == "wink2":
-            phi1 = _m.radians(float(params.get("lat_1", 0.0)))
-            fwd, inv, C = W.wink2_fwd, W.wink2_inv, W.Phi1Consts(phi1, _m.cos(phi1))
-        elif name == "hammer":
-            w = abs(float(params.get("W", 0.5)))
-            m0 = abs(float(params.get("M", 1.0)))
-            if w <= 0 or m0 <= 0:
-                raise ValueError("hammer: W and M must be > 0")
-            fwd, inv, C = W.hammer_fwd, W.hammer_inv, W.HammerConsts(w, m0 / w, 1.0 / m0)
-        elif name in ("aitoff", "wintri"):
-            fwd, inv = W.aitoff_fwd, W.aitoff_inv
-            if name == "wintri":
-                phi1 = (_m.radians(float(params["lat_1"])) if "lat_1" in params
-                        else _m.acos(2.0 / _m.pi))
-                C = W.Phi1Consts(phi1, _m.cos(phi1))
-        elif name == "vandg":
-            fwd, inv, C = W.vandg_fwd, W.vandg_inv, {"over": bool(params.get("over"))}
-        else:
-            fwd = getattr(W, f"{name}_fwd")
-            inv = getattr(W, f"{name}_inv", None) or W._no_inverse(name)
-        return ProjectionStep(
-            lambda lam, phi: fwd(lam, phi, C),
-            lambda x, y: inv(x, y, C),
-            ell, _angle(params, "lon_0"),
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-            over=bool(params.get("over")),
-        )
-
-    return build
-
-
-def _world2_builder(name: str):
-    import math as _m
-
-    from proj_spark.kernels import world as W
-    from proj_spark.kernels import world2 as W2
-
-    def build(params: dict) -> Step:
-        ell = resolve_ellipsoid(params)
-        if name == "airy":
-            # +lat_b defaults to 0 (beta = pi/4 -> Cb = log(cos pi/4)),
-            # matching pj_param's zero default in the reference
-            C = W2.setup_airy(float(params.get("lat_0", 0.0)),
-                              float(params.get("lat_b", 0.0)),
-                              bool(params.get("no_cut")))
-            fwd, inv = W2.airy_fwd, W._no_inverse("airy")
-        elif name in ("nsper", "tpers"):
-            C = W2.setup_nsper(
-                ell.a, float(params.get("lat_0", 0.0)), float(params["h"]),
-                tilt=float(params.get("tilt", 0.0)) if name == "tpers" else None,
-                azi=float(params.get("azi", 0.0)) if name == "tpers" else None,
-            )
-            fwd, inv = W2.nsper_fwd, W2.nsper_inv
-        elif name == "lagrng":
-            C = W2.setup_lagrng(float(params.get("W", 2.0)),
-                                float(params.get("lat_1", 0.0)))
-            fwd, inv = W2.lagrng_fwd, W2.lagrng_inv
-        elif name in ("vandg2", "vandg3"):
-            C = {"vdg3": name == "vandg3"}
-            fwd, inv = W2.vandg2_fwd, W._no_inverse(name)
-        elif name == "vandg4":
-            C, fwd, inv = None, W2.vandg4_fwd, W._no_inverse(name)
-        elif name == "times":
-            C, fwd, inv = None, W2.times_fwd, W2.times_inv
-        elif name in ("bacon", "apian", "ortel"):
-            C = {"bacn": name == "bacon", "ortl": name == "ortel"}
-            fwd, inv = W2.bacon_fwd, W._no_inverse(name)
-        elif name == "tobmerc":
-            C = float(params.get("k_0", params.get("k", 1.0)))
-            fwd, inv = W2.tobmerc_fwd, W2.tobmerc_inv
-        elif name == "eqearth":
-            C = W2.setup_eqearth(ell)
-            fwd, inv = W2.eqearth_fwd, W2.eqearth_inv
-        else:  # natearth natearth2 patterson comill
-            C = None
-            fwd = getattr(W2, f"{name}_fwd")
-            inv = getattr(W2, f"{name}_inv")
-        return ProjectionStep(
-            lambda lam, phi: fwd(lam, phi, C),
-            lambda x, y: inv(x, y, C),
-            ell, _angle(params, "lon_0"),
-            float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-            over=bool(params.get("over")),
-        )
-
-    return build
-
-
-_WORLD2_OPS = ("airy nsper tpers lagrng vandg2 vandg3 vandg4 times bacon "
-               "apian ortel tobmerc eqearth natearth natearth2 patterson "
-               "comill").split()
-
-
-def _world3_builder(name: str):
-    def build(params: dict) -> Step:
-        from proj_spark.kernels import world3 as W3
-
-        ell = resolve_ellipsoid(params)
-        if name in ("euler", "murd1", "murd2", "murd3", "pconic", "tissot", "vitk1"):
-            if "lat_1" not in params or "lat_2" not in params:
-                raise ValueError(f"{name}: lat_1 and lat_2 required")
-            C = W3.setup_sconics(name, float(params["lat_1"]), float(params["lat_2"]),
-                                 float(params.get("lat_0", 0.0)))
-            fwd, inv = W3.sconics_fwd, W3.sconics_inv
-        elif name == "calcofi":
-            C = W3.CalcofiConsts(ell.e, ell.es)
-            fwd, inv = W3.calcofi_fwd, W3.calcofi_inv
-        elif name == "tpeqd":
-            C = W3.setup_tpeqd(float(params.get("lat_1", 0.0)), float(params.get("lon_1", 0.0)),
-                               float(params.get("lat_2", 0.0)), float(params.get("lon_2", 0.0)))
-            fwd, inv = W3.tpeqd_fwd, W3.tpeqd_inv
-        else:  # poly
-            C = W3.setup_poly(ell, float(params.get("lat_0", 0.0)))
-            fwd, inv = W3.poly_fwd, W3.poly_inv
-        if name == "tpeqd":
-            lam0 = C.lam0
-        elif name == "calcofi":
-            lam0 = 0.0  # reference works in absolute longitude (lon_0 ignored)
-        else:
-            lam0 = _angle(params, "lon_0")
-        x0 = 0.0 if name == "calcofi" else float(params.get("x_0", 0.0))
-        y0 = 0.0 if name == "calcofi" else float(params.get("y_0", 0.0))
-        step = ProjectionStep(
-            lambda lam, phi: fwd(lam, phi, C),
-            lambda x, y: inv(x, y, C),
-            ell, lam0, x0, y0,
-            over=bool(params.get("over")),
-        )
-        if name == "calcofi":  # line/station units: no earth-radius scaling
-            step.a = 1.0
-            step.ra = 1.0
-        return step
-
-    return build
-
-
-def _build_omerc(params: dict) -> Step:
-    from proj_spark.kernels import oblique as OB
-
-    ell = resolve_ellipsoid(params)
-    C = OB.setup_omerc(ell, params, float(params.get("k_0", params.get("k", 1.0))))
-    return ProjectionStep(
-        lambda lam, phi: OB.omerc_fwd(lam, phi, C),
-        lambda x, y: OB.omerc_inv(x, y, C),
-        ell, C.lam0,  # lam0 computed by the setup, +lon_0 intentionally ignored
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-        over=bool(params.get("over")),
-    )
-
-
-def _build_ocea(params: dict) -> Step:
-    from proj_spark.kernels import oblique as OB
-
-    ell = resolve_ellipsoid(params)
-    C = OB.setup_ocea(params, float(params.get("k_0", params.get("k", 1.0))))
-    return ProjectionStep(
-        lambda lam, phi: OB.ocea_fwd(lam, phi, C),
-        lambda x, y: OB.ocea_inv(x, y, C),
-        ell, C.lam0,
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
-
-
-def _build_krovak(params: dict) -> Step:
-    from proj_spark.kernels import oblique as OB
-
-    C = OB.setup_krovak(params, modified=params.get("proj") == "mod_krovak")
+def _urm5_setup(params, ell):
+    n = float(params["n"])
+    q3 = float(params.get("q", 0.0)) / 3.0
+    alpha = _angle(params, "alpha")
+    t = n * math.sin(alpha)
+    m = math.cos(alpha) / math.sqrt(1.0 - t * t)
+    return k_world.NConsts(n, m=m, rmn=1.0 / (m * n), q3=q3)
+
+
+def _fouc_s_setup(params, ell):
+    n = _num(params, "n")
+    if not (0.0 <= n <= 1.0):
+        raise ValueError("fouc_s: n must be in [0,1]")
+    return k_world.NConsts(n)
+
+
+def _phi1_setup(key: str, default: float, c_of_phi1):
+    """loxim / wink1 / wag3: Phi1Consts from one latitude."""
+    def setup(params, ell):
+        phi1 = _angle(params, key, default)
+        return k_world.Phi1Consts(phi1, c_of_phi1(phi1),
+                                  math.tan(math.pi / 4 + 0.5 * phi1))
+    return setup
+
+
+def _cos_phi1(default: float):
+    """wink2 / wintri: Phi1Consts(phi1, cos phi1) from +lat_1."""
+    def setup(params, ell):
+        phi1 = _angle(params, "lat_1", default)
+        return k_world.Phi1Consts(phi1, math.cos(phi1))
+    return setup
+
+
+def _loxim_setup(params, ell):
+    C = _phi1_setup("lat_1", math.radians(40.0), math.cos)(params, ell)
+    if C.cosphi1 < 1e-8:
+        raise ValueError("loxim: |lat_1| must be < 90")
+    return C
+
+
+def _hammer_setup(params, ell):
+    w = abs(float(params.get("W", 0.5)))
+    m0 = abs(float(params.get("M", 1.0)))
+    if w <= 0 or m0 <= 0:
+        raise ValueError("hammer: W and M must be > 0")
+    return k_world.HammerConsts(w, m0 / w, 1.0 / m0)
+
+
+def _nsper_setup(params, ell):
+    tpers = params.get("proj") == "tpers"
+    return k_world2.setup_nsper(
+        ell.a, _num(params, "lat_0"), float(params["h"]),
+        tilt=_num(params, "tilt") if tpers else None,
+        azi=_num(params, "azi") if tpers else None)
+
+
+def _sconics_setup(params, ell):
+    name = params.get("proj")
+    if "lat_1" not in params or "lat_2" not in params:
+        raise ValueError(f"{name}: lat_1 and lat_2 required")
+    return k_world3.setup_sconics(name, float(params["lat_1"]),
+                                  float(params["lat_2"]),
+                                  _num(params, "lat_0"))
+
+
+def _peirce_q_setup(params, ell):
+    C = k_adams.setup_adams("peirce_q", params)
+    inv = {"square": k_adams.peirce_q_square_inv,
+           "diamond": k_adams.peirce_q_diamond_inv}.get(C.shape)
+    return _Kernels(k_adams.adams_fwd, inv, C)
+
+
+def _adams(name: str, inv=None) -> _Proj:
+    return _Proj(lambda params, ell: k_adams.setup_adams(name, params),
+                 k_adams.adams_fwd, inv)
+
+
+def _mod_ster(name: str) -> _Proj:
+    return _Proj(lambda params, ell: k_world4.setup_mod_ster(name, ell.es),
+                 k_world4.mod_ster_fwd, k_world4.mod_ster_inv,
+                 frame=lambda params, ell, C: {
+                     "a": C.a if C.a is not None else ell.a, "lam0": C.lam0})
+
+
+def _healpix(fwd, inv) -> _Proj:
+    # the ellipsoid variant scales by the AUTHALIC radius
+    # (healpix.cpp:568-571)
+    return _Proj(lambda params, ell: k_healpix.setup_healpix(
+        ell, rot_xy=_angle(params, "rot_xy"),
+        north_square=int(params.get("north_square", 0)),
+        south_square=int(params.get("south_square", 0))),
+        fwd, inv, frame=lambda params, ell, C: {"a": C.auth_a})
+
+
+_PROJECTIONS = {
+    # transverse / conformal cylindrical
+    "tmerc": _Proj(_tmerc_setup, k_tmerc.exact_fwd, k_tmerc.exact_inv),
+    "etmerc": _Proj(_tmerc_setup, k_tmerc.exact_fwd, k_tmerc.exact_inv),
+    "utm": _Proj(_utm_setup, k_tmerc.exact_fwd, k_tmerc.exact_inv,
+                 frame=_utm_frame),
+    "merc": _Proj(lambda p, ell: k_merc.setup_merc(
+        ell, lat_ts=_num(p, "lat_ts", None), k0=_k0(p)),
+        k_merc.merc_fwd, k_merc.merc_inv),
+    "webmerc": _Proj(lambda p, ell: k_merc.setup_webmerc(ell),
+                     k_merc.merc_fwd, k_merc.merc_inv,
+                     defaults={"ellps": "WGS84"}),
+    # conic
+    "lcc": _Proj(lambda p, ell: k_lcc.setup_lcc(
+        ell, lat_1=_num(p, "lat_1"), lat_2=_num(p, "lat_2", None),
+        lat_0=_num(p, "lat_0", None), k0=_k0(p)),
+        k_lcc.lcc_fwd, k_lcc.lcc_inv),
+    "aea": _Proj(_aea_setup, k_conic.aea_fwd, k_conic.aea_inv),
+    "leac": _Proj(_aea_setup, k_conic.aea_fwd, k_conic.aea_inv),
+    "eqdc": _Proj(lambda p, ell: k_conic.setup_eqdc(
+        ell, _num(p, "lat_1"), _num(p, "lat_2"), _num(p, "lat_0")),
+        k_conic.eqdc_fwd, k_conic.eqdc_inv),
+    "bonne": _Proj(lambda p, ell: k_conic.setup_bonne(ell, float(p["lat_1"])),
+                   k_conic.bonne_fwd, k_conic.bonne_inv),
+    # azimuthal
+    "stere": _Proj(lambda p, ell: k_azim.setup_stere(
+        ell, _num(p, "lat_0"), _num(p, "lat_ts", None), _k0(p)),
+        k_azim.stere_fwd, k_azim.stere_inv),
+    "ups": _Proj(_ups_setup, k_azim.stere_fwd, k_azim.stere_inv,
+                 defaults={"x_0": 2000000.0, "y_0": 2000000.0}),
+    "sterea": _Proj(lambda p, ell: k_azim.setup_sterea(
+        ell, _num(p, "lat_0"), _k0(p)), k_azim.sterea_fwd, k_azim.sterea_inv),
+    "laea": _Proj(lambda p, ell: k_azim.setup_laea(ell, _num(p, "lat_0")),
+                  k_azim.laea_fwd, k_azim.laea_inv),
+    "gnom": _Proj(lambda p, ell: k_azim.setup_gnom(ell, _num(p, "lat_0")),
+                  k_azim.gnom_fwd, k_azim.gnom_inv),
+    "ortho": _Proj(lambda p, ell: k_azim.setup_ortho(
+        ell, _num(p, "lat_0"), _k0(p), _num(p, "alpha")),
+        k_azim.ortho_fwd, k_azim.ortho_inv),
+    "aeqd": _Proj(lambda p, ell: k_azim.setup_aeqd(
+        ell, _num(p, "lat_0"), guam="guam" in p),
+        k_azim.aeqd_fwd, k_azim.aeqd_inv),
+    # cylindrical / pseudocylindrical
+    "cea": _Proj(lambda p, ell: k_cyl.setup_cea(
+        ell, _num(p, "lat_ts", None), _k0(p)), k_cyl.cea_fwd, k_cyl.cea_inv),
+    "cass": _Proj(lambda p, ell: k_cyl.setup_cass(
+        ell, _num(p, "lat_0"), hyperbolic="hyperbolic" in p),
+        k_cyl.cass_fwd, k_cyl.cass_inv),
+    "eqc": _Proj(lambda p, ell: k_cyl.setup_eqc(
+        _num(p, "lat_ts"), _num(p, "lat_0")), k_cyl.eqc_fwd, k_cyl.eqc_inv),
+    "somerc": _Proj(lambda p, ell: k_cyl.setup_somerc(
+        ell, _num(p, "lat_0"), _k0(p)), k_cyl.somerc_fwd, k_cyl.somerc_inv),
+    **_plain(k_cyl, "mill"),
+    **{n: _Proj(lambda p, ell: k_pseudocyl.setup_gn_sinu(
+        ell, _num(p, "m", None), _num(p, "n", None), proj=p.get("proj")),
+        k_pseudocyl.sinu_fwd, k_pseudocyl.sinu_inv)
+       for n in ("sinu", "gn_sinu", "eck6", "mbtfps")},
+    **{n: _Proj(lambda p, ell: k_pseudocyl.setup_moll(p.get("proj")),
+                k_pseudocyl.moll_fwd, k_pseudocyl.moll_inv)
+       for n in ("moll", "wag4", "wag5")},
+    **_plain(k_pseudocyl, "eck4 robin"),
+    # spherical catalogue (kernels/world.py)
+    **_plain(k_world, "larr gins8 wag7 tcc august cc denoy eck1 crast lask "
+                      "eck5 fahey wag2 gall boggs nell nell_h collg putp2 "
+                      "mbtfpp nicol"),
+    **{n: _Proj(_const(C), k_world.eck3_fwd, k_world.eck3_inv)
+       for n, C in k_world._ECK3_FAMILY.items()},
+    **{n: _Proj(_const(C), k_world.sts_fwd, k_world.sts_inv)
+       for n, C in k_world._STS_FAMILY.items()},
+    "putp5": _Proj(_const(k_world.Putp5Consts(2.0, 1.0)),
+                   k_world.putp5_fwd, k_world.putp5_inv),
+    "putp5p": _Proj(_const(k_world.Putp5Consts(1.5, 0.5)),
+                    k_world.putp5_fwd, k_world.putp5_inv),
+    "putp3": _Proj(_const(k_world.Putp3Consts(4.0 * 0.1013211836)),
+                   k_world.putp3_fwd, k_world.putp3_inv),
+    "putp3p": _Proj(_const(k_world.Putp3Consts(2.0 * 0.1013211836)),
+                    k_world.putp3_fwd, k_world.putp3_inv),
+    "putp4p": _Proj(_const(k_world.Putp4pConsts(0.874038744, 3.883251825)),
+                    k_world.putp4p_fwd, k_world.putp4p_inv),
+    "weren": _Proj(_const(k_world.Putp4pConsts(1.0, 4.442882938)),
+                   k_world.putp4p_fwd, k_world.putp4p_inv),
+    "urmfps": _Proj(lambda p, ell: _urmfps_setup(float(p["n"])),
+                    k_world.urmfps_fwd, k_world.urmfps_inv),
+    "wag1": _Proj(lambda p, ell: _urmfps_setup(0.8660254037844386467637231707),
+                  k_world.urmfps_fwd, k_world.urmfps_inv),
+    "urm5": _Proj(_urm5_setup, k_world.urm5_fwd),
+    "fouc_s": _Proj(_fouc_s_setup, k_world.fouc_s_fwd, k_world.fouc_s_inv),
+    "loxim": _Proj(_loxim_setup, k_world.loxim_fwd, k_world.loxim_inv),
+    "wink1": _Proj(_phi1_setup("lat_1", 0.0, math.cos),
+                   k_world.wink1_fwd, k_world.wink1_inv),
+    "wag3": _Proj(_phi1_setup(
+        "lat_ts", 0.0,
+        lambda phi1: math.cos(phi1) / math.cos(2.0 * phi1 / 3.0)),
+        k_world.wag3_fwd, k_world.wag3_inv),
+    "wink2": _Proj(_cos_phi1(0.0), k_world.wink2_fwd, k_world.wink2_inv),
+    "hammer": _Proj(_hammer_setup, k_world.hammer_fwd, k_world.hammer_inv),
+    "aitoff": _Proj(None, k_world.aitoff_fwd, k_world.aitoff_inv),
+    "wintri": _Proj(_cos_phi1(math.acos(2.0 / math.pi)),
+                    k_world.aitoff_fwd, k_world.aitoff_inv),
+    "vandg": _Proj(lambda p, ell: {"over": bool(p.get("over"))},
+                   k_world.vandg_fwd, k_world.vandg_inv),
+    # kernels/world2.py
+    # +lat_b defaults to 0 (beta = pi/4 -> Cb = log(cos pi/4)), matching
+    # pj_param's zero default in the reference
+    "airy": _Proj(lambda p, ell: k_world2.setup_airy(
+        _num(p, "lat_0"), _num(p, "lat_b"), bool(p.get("no_cut"))),
+        k_world2.airy_fwd),
+    "nsper": _Proj(_nsper_setup, k_world2.nsper_fwd, k_world2.nsper_inv),
+    "tpers": _Proj(_nsper_setup, k_world2.nsper_fwd, k_world2.nsper_inv),
+    "lagrng": _Proj(lambda p, ell: k_world2.setup_lagrng(
+        float(p.get("W", 2.0)), _num(p, "lat_1")),
+        k_world2.lagrng_fwd, k_world2.lagrng_inv),
+    "vandg2": _Proj(_const({"vdg3": False}), k_world2.vandg2_fwd),
+    "vandg3": _Proj(_const({"vdg3": True}), k_world2.vandg2_fwd),
+    "bacon": _Proj(_const({"bacn": True, "ortl": False}), k_world2.bacon_fwd),
+    "apian": _Proj(_const({"bacn": False, "ortl": False}), k_world2.bacon_fwd),
+    "ortel": _Proj(_const({"bacn": False, "ortl": True}), k_world2.bacon_fwd),
+    "tobmerc": _Proj(lambda p, ell: _k0(p),
+                     k_world2.tobmerc_fwd, k_world2.tobmerc_inv),
+    "eqearth": _Proj(lambda p, ell: k_world2.setup_eqearth(ell),
+                     k_world2.eqearth_fwd, k_world2.eqearth_inv),
+    **_plain(k_world2, "vandg4 times natearth natearth2 patterson comill"),
+    # kernels/world3.py
+    **{n: _Proj(_sconics_setup, k_world3.sconics_fwd, k_world3.sconics_inv)
+       for n in ("euler", "murd1", "murd2", "murd3", "pconic", "tissot",
+                 "vitk1")},
+    # line/station units in absolute longitude: no earth-radius scaling,
+    # +lon_0/+x_0/+y_0 ignored
+    "calcofi": _Proj(lambda p, ell: k_world3.CalcofiConsts(ell.e, ell.es),
+                     k_world3.calcofi_fwd, k_world3.calcofi_inv,
+                     frame=lambda p, ell, C: {"a": 1.0, "lam0": 0.0,
+                                              "x0": 0.0, "y0": 0.0}),
+    "tpeqd": _Proj(lambda p, ell: k_world3.setup_tpeqd(
+        _num(p, "lat_1"), _num(p, "lon_1"), _num(p, "lat_2"),
+        _num(p, "lon_2")),
+        k_world3.tpeqd_fwd, k_world3.tpeqd_inv, frame=_setup_lam0),
+    "poly": _Proj(lambda p, ell: k_world3.setup_poly(ell, _num(p, "lat_0")),
+                  k_world3.poly_fwd, k_world3.poly_inv),
+    # oblique (kernels/oblique.py)
+    "omerc": _Proj(lambda p, ell: k_oblique.setup_omerc(ell, p, _k0(p)),
+                   k_oblique.omerc_fwd, k_oblique.omerc_inv,
+                   frame=_setup_lam0),
+    "ocea": _Proj(lambda p, ell: k_oblique.setup_ocea(p, _k0(p)),
+                  k_oblique.ocea_fwd, k_oblique.ocea_inv, frame=_setup_lam0),
     # krovak pins the Bessel ellipsoid regardless of +ellps
-    ell = Ellipsoid("bessel-krovak", C.a, 1.0 / (1.0 - math.sqrt(1.0 - 0.006674372230614)))
-    return ProjectionStep(
-        lambda lam, phi: OB.krovak_fwd(lam, phi, C),
-        lambda x, y: OB.krovak_inv(x, y, C),
-        ell, C.lam0,
-        float(params.get("x_0", 0.0)), float(params.get("y_0", 0.0)),
-    )
-
-
-def _build_geos(params: dict) -> Step:
-    from proj_spark.kernels import oblique as OB
-
-    ell = resolve_ellipsoid(params)
-    C = OB.setup_geos(ell, float(params["h"]), str(params.get("sweep", "y")))
-    return _proj_step(OB.geos_fwd, OB.geos_inv, C, params, ell)
-
-
-_WORLD_OPS = (
-    "larr gins8 wag7 tcc august cc denoy eck1 crast lask eck5 fahey wag2 "
-    "gall boggs nell nell_h collg putp2 mbtfpp eck3 kav7 wag6 putp1 fouc "
-    "kav5 qua_aut mbt_s putp5 putp5p putp3 putp3p putp4p weren urmfps wag1 "
-    "urm5 fouc_s loxim wink1 wag3 wink2 hammer aitoff wintri vandg nicol"
-).split()
+    **{n: _Proj(lambda p, ell: k_oblique.setup_krovak(
+        p, modified=p.get("proj") == "mod_krovak"),
+        k_oblique.krovak_fwd, k_oblique.krovak_inv,
+        frame=lambda p, ell, C: {"a": C.a, "lam0": C.lam0})
+       for n in ("krovak", "mod_krovak")},
+    "geos": _Proj(lambda p, ell: k_oblique.setup_geos(
+        ell, float(p["h"]), str(p.get("sweep", "y"))),
+        k_oblique.geos_fwd, k_oblique.geos_inv),
+    # kernels/world4.py
+    **_plain(k_world4, "eck2 hatano mbt_fps mbtfpq"),
+    "putp6": _Proj(_const(k_world4.PUTP6),
+                   k_world4.putp6_fwd, k_world4.putp6_inv),
+    "putp6p": _Proj(_const(k_world4.PUTP6P),
+                    k_world4.putp6_fwd, k_world4.putp6_inv),
+    "tcea": _Proj(lambda p, ell: k_world4.TceaConsts(
+        _k0(p), _angle(p, "lat_0")), k_world4.tcea_fwd, k_world4.tcea_inv),
+    "ccon": _Proj(lambda p, ell: k_world4.setup_ccon(_num(p, "lat_1")),
+                  k_world4.ccon_fwd, k_world4.ccon_inv),
+    "rpoly": _Proj(lambda p, ell: k_world4.setup_rpoly(
+        _num(p, "lat_ts"), _num(p, "lat_0")), k_world4.rpoly_fwd),
+    # fixed lam0/phi0 (reference bertin1953.cpp:81-87)
+    "bertin1953": _Proj(None, k_world4.bertin1953_fwd,
+                        frame=lambda p, ell, C: {"lam0": 0.0}),
+    "oea": _Proj(lambda p, ell: k_world4.setup_oea(
+        float(p["n"]), float(p["m"]), _num(p, "theta"), _num(p, "lat_0")),
+        k_world4.oea_fwd, k_world4.oea_inv),
+    "lcca": _Proj(lambda p, ell: k_world4.setup_lcca(
+        ell, _num(p, "lat_0"), _k0(p)), k_world4.lcca_fwd, k_world4.lcca_inv),
+    "gstmerc": _Proj(lambda p, ell: k_world4.setup_gstmerc(
+        ell, _num(p, "lat_0"), _k0(p)),
+        k_world4.gstmerc_fwd, k_world4.gstmerc_inv),
+    "col_urban": _Proj(lambda p, ell: k_world4.setup_col_urban(
+        ell, _num(p, "lat_0"), _num(p, "h_0")),
+        k_world4.col_urban_fwd, k_world4.col_urban_inv),
+    "labrd": _Proj(lambda p, ell: k_world4.setup_labrd(
+        ell, _num(p, "lat_0"), _num(p, "azi"), _k0(p)),
+        k_world4.labrd_fwd, k_world4.labrd_inv),
+    "chamb": _Proj(lambda p, ell: k_world4.setup_chamb(
+        _num(p, "lat_1"), _num(p, "lon_1"), _num(p, "lat_2"),
+        _num(p, "lon_2"), _num(p, "lat_3"), _num(p, "lon_3"),
+        _angle(p, "lon_0")), k_world4.chamb_fwd),
+    "bipc": _Proj(lambda p, ell: "ns" in p and str(p.get("ns")) not in (
+        "False", "0"), k_world4.bipc_fwd, k_world4.bipc_inv),
+    "imw_p": _Proj(lambda p, ell: k_world4.setup_imw_p(
+        ell, float(p["lat_1"]), float(p["lat_2"]), _num(p, "lon_1", None)),
+        k_world4.imw_p_fwd, k_world4.imw_p_inv),
+    "rouss": _Proj(lambda p, ell: k_world4.setup_rouss(
+        ell, _num(p, "lat_0"), _k0(p)),
+        k_world4.rouss_fwd, k_world4.rouss_inv),
+    **{n: _mod_ster(n) for n in ("mil_os", "lee_os", "gs48", "alsk", "gs50")},
+    # fixed Earth: intl ellipsoid, lam0=173E, phi0=41S, NZ offsets
+    # (reference nzmg.cpp:112-118); user x_0/y_0/lon_0 ignored
+    "nzmg": _Proj(None, k_world4.nzmg_fwd, k_world4.nzmg_inv,
+                  frame=lambda p, ell, C: {
+                      "a": ELLIPSOIDS["intl"].a, "lam0": math.radians(173.0),
+                      "x0": 2510000.0, "y0": 6023150.0}),
+    # interrupted (kernels/interrupted.py)
+    **_plain(k_interrupted, "goode igh igh_o imoll imoll_o"),
+    # conformal squares (kernels/adams.py)
+    "guyou": _adams("guyou"),
+    "adams_hemi": _adams("adams_hemi"),
+    "adams_ws1": _adams("adams_ws1"),
+    "adams_ws2": _adams("adams_ws2", k_adams.adams_ws2_inv),
+    "peirce_q": _Proj(_peirce_q_setup, k_adams.adams_fwd),
+    # Space Oblique Mercator: the ascending longitude is the central
+    # meridian (reference som.cpp P->lam0)
+    "som": _Proj(lambda p, ell: k_som.setup_som(
+        ell, alf=_angle(p, "inc_angle"), p22=_num(p, "ps_rev"),
+        lam0=_angle(p, "asc_lon")),
+        k_som.som_fwd, k_som.som_inv, frame=_setup_lam0),
+    "lsat": _Proj(lambda p, ell: k_som.setup_lsat(
+        ell, int(p["lsat"]), int(p["path"])),
+        k_som.som_fwd, k_som.som_inv, frame=_setup_lam0),
+    "misrsom": _Proj(lambda p, ell: k_som.setup_misrsom(ell, int(p["path"])),
+                     k_som.som_fwd, k_som.som_inv, frame=_setup_lam0),
+    "qsc": _Proj(lambda p, ell: k_qsc.setup_qsc(
+        ell, _angle(p, "lon_0"), _angle(p, "lat_0")),
+        k_qsc.qsc_fwd, k_qsc.qsc_inv),
+    # isea consumes +lon_0 as an orientation override in setup
+    # (isea.cpp:1027-1029) AND the generic lon_0 subtraction applies
+    "isea": _Proj(lambda p, ell: k_isea.setup_isea(
+        ell, orient=str(p.get("orient", "isea")),
+        lat_0=_num(p, "lat_0", None), lon_0=_num(p, "lon_0", None),
+        azi=_num(p, "azi"), mode=str(p.get("mode", "plane"))),
+        k_isea.isea_fwd, k_isea.isea_inv),
+    "healpix": _healpix(k_healpix.healpix_fwd, k_healpix.healpix_inv),
+    "rhealpix": _healpix(k_healpix.rhealpix_fwd, k_healpix.rhealpix_inv),
+}
 
 
 _BUILDERS = {
-    "tmerc": _build_tmerc,
-    "etmerc": _build_tmerc,
+    **{name: partial(_build_projection, name) for name in _PROJECTIONS},
     "utm": _build_utm,
-    "lcc": _build_lcc,
-    "merc": _build_merc,
-    "webmerc": _build_webmerc,
-    "aea": _build_aea,
-    "leac": _build_aea,
-    "eqdc": _build_eqdc,
-    "bonne": _build_bonne,
-    "stere": _build_stere,
-    "ups": _build_ups,
-    "sterea": _build_sterea,
-    "laea": _build_laea,
-    "gnom": _build_gnom,
-    "ortho": _build_ortho,
-    "aeqd": _build_aeqd,
-    "cea": _build_cea,
-    "cass": _build_cass,
-    "eqc": _build_eqc,
-    "mill": _build_mill,
-    "somerc": _build_somerc,
-    "sinu": _build_sinu_family,
-    "gn_sinu": _build_sinu_family,
-    "eck6": _build_sinu_family,
-    "mbtfps": _build_sinu_family,
-    "moll": _build_moll_family,
-    "wag4": _build_moll_family,
-    "wag5": _build_moll_family,
-    "eck4": _build_eck4,
-    "robin": _build_robin,
-    **{op: _world_builder(op) for op in _WORLD_OPS},
-    **{op: _world2_builder(op) for op in _WORLD2_OPS},
-    **{op: _world3_builder(op) for op in
-       "euler murd1 murd2 murd3 pconic tissot vitk1 calcofi tpeqd poly".split()},
-    "omerc": _build_omerc,
-    "ocea": _build_ocea,
-    "krovak": _build_krovak,
-    "mod_krovak": _build_krovak,
-    "geos": _build_geos,
-    **{op: _world4_builder(op) for op in
-       "eck2 hatano putp6 putp6p mbt_fps mbtfpq tcea ccon rpoly bertin1953 "
-       "oea lcca gstmerc col_urban nzmg mil_os lee_os gs48 alsk gs50 "
-       "rouss imw_p bipc chamb labrd".split()},
-    **{op: _interrupted_builder(op) for op in
-       "goode igh igh_o imoll imoll_o".split()},
-    **{op: _adams_builder(op) for op in
-       "guyou peirce_q adams_hemi adams_ws1 adams_ws2".split()},
     "ob_tran": ObTranStep,
-    **{op: _som_builder(op) for op in "som lsat misrsom".split()},
-    "qsc": _build_qsc,
-    "isea": _build_isea,
-    "healpix": _build_healpix,
-    "rhealpix": _build_healpix,
     "geoc": lambda p: GeocStep(resolve_ellipsoid(p)),
     "sch": SchStep,
     "s2": S2Step,
